@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 
-import graft.annotate.{ContextScan, FusedAnnotate, LemmaScan, NativeAnnotate}
+import graft.annotate.{ContextScan, Lemma, NativeAnnotate}
 import graft.dict.AnnotatorModel
 
 /** Single user-facing entry point mirroring the reference's
@@ -86,12 +86,13 @@ object Annotator {
     }
   }
 
-  /** Corpus → triple table — the scale path (native Catalyst plan); the
-    * lemmatized variant routes through the lemma scan + Catalyst expansion
-    * joins (lemma mode is an opt-in request feature, not the bulk path). */
+  /** Corpus → triple table on the native plan. `lemmatize=true` runs the
+    * same triple Generator over the lemma-space text with the lemma-built
+    * model; stop words are lemmatized the same way, so they match the
+    * lemma dictionary's terms. */
   def annotate(extracted: DataFrame,
                model: Broadcast[AnnotatorModel],
-               maps: Broadcast[FusedAnnotate.ExpansionMaps],
+               maps: Broadcast[NativeAnnotate.ExpansionMaps],
                dictVersion: String,
                request: Request = Request(),
                lemmaModel: Option[Broadcast[AnnotatorModel]] = None): DataFrame = {
@@ -119,65 +120,13 @@ object Annotator {
         "lemmatize=true requires a lemma-built model (DictBuild.buildLemmatized)"))
       require(request.opts.wholeWordOnly,
         "lemmatize=true is whole-word by construction (token-aligned offset mapping)")
-      // lemma scan → same fused per-doc expansion/scoring as the main path
-      import org.apache.spark.sql.functions._
-      val m = LemmaScan.annotateDirectLemma(extracted, lm, request.opts.longestOnly)
-        .toDF()
-      val exp = maps.value
-      val byDoc = m
-        .filter(if (request.opts.ontologies.isEmpty) lit(true)
-          else col("ont").isin(request.opts.ontologies: _*))
-        .filter(if (request.opts.excludeSynonyms) col("matchType") === MatchType.Pref
-          else lit(true))
-        .filter(semB.map(b => col("classIri").isInCollection(b.value))
-          .getOrElse(lit(true)))
-        .groupBy(col("url"), col("classIri"))
-        .agg(
-          sum(when(col("matchType") === MatchType.Pref, Score.PrefWeight)
-            .otherwise(Score.SynWeight)).as("score"),
-          min(col("matchType")).as("match_type"))
-      val direct = byDoc
-        .filter(col("score") >= request.opts.scoreThreshold)
-        .select(col("url").as("subj"), lit(Pred.Direct).as("pred"),
-          col("classIri").as("obj"), col("match_type"),
-          lit(0).as("distance"), col("score"), lit(dictVersion).as("dict_version"))
-      val directClasses = byDoc.select(col("url"), col("classIri"))
-      // legs are Option-gated on the request flags — NOT row-count-probed:
-      // `DataFrame.isEmpty` is an eager action that would execute the whole
-      // lemma scan + expansion joins once during query CONSTRUCTION and then
-      // recompute them when the caller runs the returned plan (2-3x cost)
-      val hier: Option[DataFrame] =
-        if (!request.opts.expandHierarchy) None
-        else Some {
-          val cl = exp.closure.toSeq.flatMap { case (c, as) =>
-            as.collect { case (a, d) if d <= request.opts.hierarchyMaxLevel => (c, a, d) }
-          }
-          import spark.implicits._
-          directClasses
-            .join(broadcast(cl.toDF("classIri", "ancestor", "distance")), Seq("classIri"))
-            .groupBy(col("url"), col("ancestor")).agg(min("distance").as("distance"))
-            .select(col("url").as("subj"), lit(Pred.Expanded).as("pred"),
-              col("ancestor").as("obj"), lit(MatchType.Hier).as("match_type"),
-              col("distance"),
-              (lit(7.0) / greatest(col("distance"), lit(1))).as("score"),
-              lit(dictVersion).as("dict_version"))
-            .filter(col("score") >= request.opts.scoreThreshold)
-        }
-      val mapped: Option[DataFrame] =
-        if (!request.opts.expandMappings ||
-          Score.MapWeight < request.opts.scoreThreshold) None
-        else Some {
-          val mp = exp.mappings.toSeq.flatMap { case (c, ms) => ms.map(m2 => (c, m2)) }
-          import spark.implicits._
-          directClasses
-            .join(broadcast(mp.toDF("classIri", "mapped_iri")), Seq("classIri"))
-            .select(col("url"), col("mapped_iri")).distinct()
-            .select(col("url").as("subj"), lit(Pred.Mapped).as("pred"),
-              col("mapped_iri").as("obj"), lit(MatchType.Map).as("match_type"),
-              lit(1).as("distance"), lit(Score.MapWeight).as("score"),
-              lit(dictVersion).as("dict_version"))
-        }
-      (hier.toSeq ++ mapped.toSeq).foldLeft(direct)(_ unionByName _)
+      import org.apache.spark.sql.functions.{col, udf}
+      val lemmaText = udf((t: String) => if (t == null) null else Lemma.lemmatizeDoc(t).lemmaText)
+      val lemmaStops = request.opts.stopWords.map(w => Lemma.lemmaTerm(
+        w.trim.replaceAll("\\s+", " ").toUpperCase(java.util.Locale.ROOT)))
+      NativeAnnotate.annotateTriples(
+        extracted.select(col("url"), lemmaText(col("text")).as("text")),
+        lm, maps, dictVersion, request.opts.copy(stopWords = lemmaStops), semB)
     }
   }
 

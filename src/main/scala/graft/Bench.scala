@@ -45,7 +45,7 @@ object Bench {
       spark, AutomatonBuild.build(spark, dict, "v1"))
     val closure = graft.graph.Closure.transitiveClosure(
       OntologyFixture.edgesDf(spark), 5).localCheckpoint()
-    val maps = spark.sparkContext.broadcast(graft.annotate.FusedAnnotate
+    val maps = spark.sparkContext.broadcast(graft.annotate.NativeAnnotate
       .expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
     (model, maps)
   }
@@ -63,20 +63,8 @@ object Bench {
     // native fused per-doc annotate (scan + score + hierarchy + mapping
     // expansion in one Catalyst Generate over in-place UTF8String bytes) —
     // ZERO shuffles corpus-side, zero object-mode conversion
-    annotateImpl(extracted, model, maps).count()
+    graft.annotate.NativeAnnotate.annotateTriples(extracted, model, maps, "v1").count()
     (nDocs, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** The benched annotate formulation: Catalyst-native Generator by default;
-    * `SPARK_GRAFT_IMPL=fused` selects the typed mapPartitions form (A/B). */
-  private def annotateImpl(extracted: org.apache.spark.sql.DataFrame,
-                           model: org.apache.spark.broadcast.Broadcast[graft.dict.AnnotatorModel],
-                           maps: org.apache.spark.broadcast.Broadcast[graft.annotate.FusedAnnotate.ExpansionMaps])
-      : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_IMPL").contains("fused"))
-      graft.annotate.FusedAnnotate.annotateTriples(extracted, model, maps, "v1").toDF()
-    else
-      graft.annotate.NativeAnnotate.annotateTriples(extracted, model, maps, "v1")
   }
 
   /** Materialize the amplified scaling corpus ONCE as parquet (outside any
@@ -117,7 +105,7 @@ object Bench {
     val corpus = spark.read.parquet(corpusPath)
     val input = if (limit > 0) corpus.limit(limit) else corpus
     val t0 = System.nanoTime()
-    annotateImpl(input, model, maps).count()
+    graft.annotate.NativeAnnotate.annotateTriples(input, model, maps, "v1").count()
     (System.nanoTime() - t0) / 1e9
   }
 

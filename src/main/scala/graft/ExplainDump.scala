@@ -10,7 +10,7 @@ object ExplainDump {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_pushdown_agg", "q_join_nation", "q_window_topk",
-        "ann_triples_native", "ann_hier", "ann_score", "dedup_minhash",
+        "ann_triples", "ann_hier", "ann_score", "dedup_minhash",
         "sim_topk", "text_quality")
     val spark = SparkSession.builder()
       .master("local[4]")

@@ -217,10 +217,10 @@ object Pipeline {
 
   /** The matches-stage body, shared with the incremental path: native
     * Generator scan (in-place UTF8String bytes, no object-mode island);
-    * columns renamed to the persisted Match schema. The typed mapPartitions
-    * form (Scan.annotateDirect) stays parity-tested. dictShards > 1 = the
-    * S4 >driver-memory regime: the full automaton is never built or
-    * broadcast whole — k shard models, one at a time. */
+    * columns renamed to the persisted Match schema. The scan is
+    * parity-tested against the naive scalar matcher (`ReferenceOracle`).
+    * dictShards > 1 = the S4 >driver-memory regime: the full automaton is
+    * never built or broadcast whole — k shard models, one at a time. */
   private def scanAndFilter(spark: SparkSession, cfg: Config, dict: DataFrame,
                             corpus: DataFrame, concepts: DataFrame,
                             version: String): DataFrame = {

@@ -46,43 +46,6 @@ object FloorProbe {
   }
 }
 
-/** Dev-only: same-JVM interleaved A/B of the native Generator annotate vs
-  * the typed mapPartitions form — removes JVM-startup and machine-drift
-  * asymmetry from the comparison (both run warm, alternating). */
-object ABProbe {
-  def main(args: Array[String]): Unit = {
-    val corpusPath = args(0)
-    val cores = args(1).toInt
-    val rounds = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val (model, maps) = Bench.buildModel(spark)
-    val corpus = spark.read.parquet(corpusPath)
-    def run(native: Boolean): Double = {
-      val t0 = System.nanoTime()
-      val df = if (native)
-        graft.annotate.NativeAnnotate.annotateTriples(corpus, model, maps, "v1")
-      else
-        graft.annotate.FusedAnnotate.annotateTriples(corpus, model, maps, "v1").toDF()
-      df.count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    run(native = true); run(native = false) // warmup both
-    val pairs = (1 to rounds).map { i =>
-      val n = run(native = true)
-      val f = run(native = false)
-      println(f"AB round $i: native $n%.3f s, fused $f%.3f s (ratio ${f / n}%.2f)")
-      (n, f)
-    }
-    println(f"AB BEST native ${pairs.map(_._1).min}%.3f s, fused ${pairs.map(_._2).min}%.3f s, " +
-      f"speedup ${pairs.map(_._2).min / pairs.map(_._1).min}%.2fx")
-    spark.stop()
-  }
-}
-
 /** Child JVM for one scaling level (spawned by Bench under `taskset`): runs
   * the annotate job over the materialized corpus at local[cores] — warmup +
   * best of 2 — and prints `SCALING_SEC <s>` for the parent to parse. Being a

@@ -6,7 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.annotate.{Corpus, Expand, Filters, Scan, Scoring}
+import graft.annotate.{Corpus, Expand, Filters, Scoring}
 import graft.dict.{AnnotatorModel, AutomatonBuild, DictBuild}
 import graft.emit.Triples
 import graft.fixture.OntologyFixture
@@ -35,11 +35,11 @@ object SparkEntry {
   private[graft] val modelCache = new ConcurrentHashMap[SparkSession, Broadcast[AnnotatorModel]]()
   private[graft] val closureCache = new ConcurrentHashMap[SparkSession, DataFrame]()
   private[graft] val mapsCache =
-    new ConcurrentHashMap[SparkSession, Broadcast[graft.annotate.FusedAnnotate.ExpansionMaps]]()
+    new ConcurrentHashMap[SparkSession, Broadcast[graft.annotate.NativeAnnotate.ExpansionMaps]]()
 
-  private[graft] def fusedMaps(s: SparkSession): Broadcast[graft.annotate.FusedAnnotate.ExpansionMaps] =
+  private[graft] def fusedMaps(s: SparkSession): Broadcast[graft.annotate.NativeAnnotate.ExpansionMaps] =
     mapsCache.computeIfAbsent(s, s => s.sparkContext.broadcast(
-      graft.annotate.FusedAnnotate.expansionMaps(
+      graft.annotate.NativeAnnotate.expansionMaps(
         closure(s), OntologyFixture.mappingsDf(s), MaxLevel)))
 
   private[graft] def model(s: SparkSession): Broadcast[AnnotatorModel] =
@@ -163,9 +163,8 @@ object SparkEntry {
   private[graft] def corpus(s: SparkSession, dir: String): DataFrame =
     Corpus.extract(Corpus.fromDriverTable(docsTable(s, dir)))
 
-  /** Shared direct-match stream — the NATIVE Generator scan, so every ann_*
-    * oracle query downstream exercises the scale path; `ann_direct_typed`
-    * keeps the typed mapPartitions form under the same DuckDB oracle. */
+  /** Shared direct-match stream — the native Generator scan, so every ann_*
+    * oracle query downstream exercises the scan `Pipeline.run` uses. */
   private[graft] def matches(s: SparkSession, dir: String): DataFrame =
     graft.annotate.NativeAnnotate.annotateMatches(corpus(s, dir), model(s))
 
@@ -235,16 +234,17 @@ object SparkEntry {
   }
 
   /** Flagship: full annotate pipeline (direct + expansions → triples) on the
-    * smoke slice, on the scale path (per-doc aggregation folded into the
-    * scan — [[graft.annotate.ScanAgg]]); driver checks rows > 0. */
+    * smoke slice, through the assembly `Pipeline.run` executes — native
+    * match scan → `Scoring.directScores` → `Expand` joins →
+    * `Triples.assemble`; driver checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val direct = graft.annotate.ScanAgg
-      .annotateDirectAgg(corpus(spark, dir), model(spark)).toDF()
-    val hier = Expand.hierarchy(direct, closure(spark), MaxLevel, assumeUnique = true)
-    val mapped = Expand.mappings(direct, OntologyFixture.mappingsDf(spark),
-      assumeUnique = true)
-    Triples.assemble(direct, hier, mapped, "v1")
+    val m = matches(spark, dir)
+      .withColumnRenamed("class_iri", "classIri")
+      .withColumnRenamed("match_type", "matchType")
+    Triples.assemble(Scoring.directScores(m),
+      Expand.hierarchy(m, closure(spark), MaxLevel),
+      Expand.mappings(m, OntologyFixture.mappingsDf(spark)), "v1")
   }
 
   // ---- queries ----------------------------------------------------------

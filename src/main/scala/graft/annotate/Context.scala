@@ -110,9 +110,9 @@ case class ContextMatch(url: String, from: Int, to: Int, text: String,
 
 object ContextScan {
 
-  /** Direct annotation with clinical-context attributes — the scan pass of
-    * [[Scan.annotateDirect]] plus per-hit [[Context.classify]] while the
-    * document text is in hand (zero extra shuffles). */
+  /** Direct annotation with clinical-context attributes — the dictionary
+    * scan plus per-hit [[Context.classify]] while the document text is in
+    * hand (zero extra shuffles). */
   def annotateWithContext(extracted: DataFrame,
                           model: Broadcast[AnnotatorModel],
                           longestOnly: Boolean = false,

@@ -14,29 +14,23 @@ object Expand {
 
   /** A7: direct (url, classIri) × closure(child, ancestor, distance ≤ L)
     * → (url, ancestor, distance) with min distance per (url, ancestor).
-    * `assumeUnique` skips the pre-join distinct (one shuffle) when the input
-    * is already one row per (url, classIri) — e.g. [[ScanAgg]] output. The
-    * post-join groupBy still shuffles, but map-side partial aggregation
-    * collapses it to ≈ output size first (url-local groups). */
-  def hierarchy(direct: DataFrame, closure: DataFrame, maxLevel: Int,
-                assumeUnique: Boolean = false): DataFrame = {
-    val d = direct.select(col("url"), col("classIri"))
-    (if (assumeUnique) d else d.distinct())
+    * The input may carry one row per occurrence: the pre-join distinct
+    * collapses it to (url, classIri) pairs, and map-side partial
+    * aggregation collapses the post-join groupBy to ≈ output size first
+    * (url-local groups). */
+  def hierarchy(direct: DataFrame, closure: DataFrame, maxLevel: Int): DataFrame =
+    direct.select(col("url"), col("classIri")).distinct()
       .join(broadcast(closure.filter(col("distance") <= maxLevel)),
         col("classIri") === col("child"))
       .groupBy(col("url"), col("ancestor"))
       .agg(min(col("distance")).as("distance"))
-  }
 
   /** A8: direct classes × mappings(class_iri, mapped_iri, kind). */
-  def mappings(direct: DataFrame, mappingsTable: DataFrame,
-               assumeUnique: Boolean = false): DataFrame = {
-    val d = direct.select(col("url"), col("classIri"))
-    (if (assumeUnique) d else d.distinct())
+  def mappings(direct: DataFrame, mappingsTable: DataFrame): DataFrame =
+    direct.select(col("url"), col("classIri")).distinct()
       .join(broadcast(mappingsTable), col("classIri") === col("class_iri"))
       .select(col("url"), col("mapped_iri"), col("kind"))
       .distinct()
-  }
 
   /** A9: deterministic CUI canonicalization — left join against the
     * resolution table (class_iri, preferred_iri); unresolved classes

@@ -18,25 +18,26 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.AnnotateOptions
 import graft.dict.AnnotatorModel
 
-/** The native-plan formulation of the fused annotate pass (SURVEY.md §5's
-  * documented escape hatch, promoted because profiles demanded it): a custom
-  * Catalyst `Generator` applied in a plain `select`, so the whole corpus path
-  * is `FileScan parquet → Project → Generate → ...` with **no object-mode
-  * island** — the `DeserializeToObject`/`SerializeFromObject` pair of the
-  * `mapPartitions` form is gone, and with it the dominant cost the round-1
-  * bench measured (~60 % of annotate wall): decoding every page's UTF-8
-  * bytes into a Java UTF-16 `String`. The generator scans the parquet
-  * reader's `UTF8String` bytes IN PLACE ([[graft.dict.Automaton.scanAsciiBytesInto]]),
-  * falls back to the char-level scan only for non-ASCII documents, and emits
-  * rows whose string fields are shared interned `UTF8String` constants
-  * (pred/match_type) or pre-encoded concept IRIs — zero per-row string
-  * conversion on the output side too (the `mapPartitions` form re-encoded
-  * five Java Strings per triple).
+/** The dictionary-scan operator (A1–A3, with A4–A12 fused into the triple
+  * form) as custom Catalyst `Generator`s applied in a plain `select`, so the
+  * whole corpus path is `FileScan parquet → Project → Generate → ...` with
+  * **no object-mode island**: no `DeserializeToObject`/`SerializeFromObject`
+  * pair, and no decode of every page's UTF-8 bytes into a Java UTF-16
+  * `String` (~60 % of annotate wall when the scan ran in object mode). The
+  * generators scan the parquet reader's `UTF8String` bytes IN PLACE
+  * ([[graft.dict.Automaton.scanUtf8Into]]) and emit rows whose string
+  * fields are shared interned `UTF8String` constants (pred/match_type) or
+  * pre-encoded concept IRIs — zero per-row string conversion.
   *
-  * Semantics are identical to [[FusedAnnotate.annotateTriples]] (asserted by
-  * parity tests over the full smoke corpus and the options matrix, plus the
-  * DuckDB oracle on `ann_triples_native`); the `mapPartitions` form remains
-  * as the typed-API reference implementation.
+  * One generator per output shape:
+  *  - [[annotateMatches]] / [[annotateMatchesSharded]]: per-occurrence
+  *    matches, checked against the naive scalar matcher
+  *    ([[graft.oracle.ReferenceOracle.directMatches]]) and the DuckDB
+  *    oracles (`ann_direct`, `ann_longest`, `ann_sharded`);
+  *  - [[annotateTriples]]: the complete per-document triple set, checked
+  *    against the join assembly `Pipeline.run` executes (`Filters` →
+  *    `Scoring.directScores` → `Expand` → `Triples.assemble` → threshold)
+  *    over the full request-option matrix, and by the `ann_triples` oracle.
   */
 object NativeAnnotate {
 
@@ -52,12 +53,38 @@ object NativeAnnotate {
     StructField("distance", IntegerType, nullable = false),
     StructField("score", DoubleType, nullable = false)))
 
-  /** Corpus → complete triple set, Catalyst-native. Same contract and option
-    * surface as [[FusedAnnotate.annotateTriples]]; returns a DataFrame with
-    * the [[graft.Triple]] column layout. */
+  /** Ontology-side broadcast state for [[annotateTriples]]. `maxLevel`
+    * records the closure cap the maps were built with — requests beyond it
+    * fail loudly instead of silently truncating. */
+  case class ExpansionMaps(
+      closure: Map[String, Array[(String, Int)]], // classIri -> (ancestor, minDist)
+      mappings: Map[String, Array[String]], // classIri -> mapped iris
+      maxLevel: Int)
+      extends Serializable
+
+  def expansionMaps(closureDf: DataFrame, mappingsDf: DataFrame,
+                    maxLevel: Int): ExpansionMaps = {
+    val cl = closureDf.filter(col("distance") <= maxLevel)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+      .groupBy(_._1).map { case (c, rows) =>
+        c -> rows.map(r => (r._2, r._3)).sortBy(_._1)
+      }
+    val mp = mappingsDf.select(col("class_iri"), col("mapped_iri"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+      .groupBy(_._1).map { case (c, rows) => c -> rows.map(_._2).distinct.sorted }
+    ExpansionMaps(cl, mp, maxLevel)
+  }
+
+  /** Corpus → complete triple set (direct + expanded + mapped), map-only.
+    * Honors the full reference request-option surface (A4/A5/A10/A11):
+    * ontologies whitelist, semantic-type class filter (pass the allowed
+    * class set via `semanticTypeClasses`), stop_words, exclude_synonyms,
+    * longest_only, whole_word_only, hierarchy level cap, expansion toggles,
+    * score threshold. Returns a DataFrame with the [[graft.Triple]] column
+    * layout. */
   def annotateTriples(extracted: DataFrame,
                       model: Broadcast[AnnotatorModel],
-                      maps: Broadcast[FusedAnnotate.ExpansionMaps],
+                      maps: Broadcast[ExpansionMaps],
                       dictVersion: String,
                       opts: AnnotateOptions = AnnotateOptions(),
                       semanticTypeClasses: Option[Broadcast[Set[String]]] = None,
@@ -72,10 +99,8 @@ object NativeAnnotate {
       lit(dictVersion).as("dict_version"))
   }
 
-  /** Native-plan form of [[Scan.annotateDirect]]: per-occurrence matches
-    * with 1-based inclusive offsets — `(url, from, to, text, class_iri, ont,
-    * match_type)`. Same zero-copy byte scan; parity-tested against the typed
-    * mapPartitions form. */
+  /** Per-occurrence matches with 1-based inclusive offsets — `(url, from,
+    * to, text, class_iri, ont, match_type)`. NULL text yields no rows. */
   def annotateMatches(extracted: DataFrame,
                       model: Broadcast[AnnotatorModel],
                       longestOnly: Boolean = false,
@@ -85,9 +110,9 @@ object NativeAnnotate {
     extracted.select(col("url"), GraftShim.column(gen))
   }
 
-  /** Sharded-dictionary match stream on the native plan (S4 scale path —
-    * see [[AnnotateMatchesShardedGen]]); spec-pinned equal to the typed
-    * [[Sharded.annotateDirect]] and to the single-automaton scan. */
+  /** Sharded-dictionary match stream (S4 scale path — see
+    * [[AnnotateMatchesShardedGen]]); spec-pinned equal to the
+    * single-automaton [[annotateMatches]]. */
   def annotateMatchesSharded(extracted: DataFrame,
                              models: Seq[Broadcast[AnnotatorModel]],
                              longestOnly: Boolean = false,
@@ -101,9 +126,9 @@ object NativeAnnotate {
 
 /** Offset-bearing sibling of [[AnnotateTriplesGen]]: emits one row per
   * dictionary OCCURRENCE — `(from, to, text, class_iri, ont, match_type)`,
-  * offsets 1-based inclusive (reference mgrep wire-tuple parity) — the
-  * native-plan form of [[Scan.annotateDirect]] used by the persisted-matches
-  * pipeline stage and the request-filter queries. */
+  * offsets 1-based inclusive (reference mgrep wire-tuple parity) — the scan
+  * behind the persisted-matches pipeline stage and the request-filter
+  * queries. */
 case class AnnotateMatchesGen(
     child: Expression,
     model: Broadcast[AnnotatorModel],
@@ -358,7 +383,7 @@ object CompiledMatcher {
 case class AnnotateTriplesGen(
     child: Expression,
     model: Broadcast[AnnotatorModel],
-    maps: Broadcast[FusedAnnotate.ExpansionMaps],
+    maps: Broadcast[NativeAnnotate.ExpansionMaps],
     opts: AnnotateOptions,
     semanticTypeClasses: Option[Broadcast[Set[String]]],
     denseLimit: Int)
@@ -398,7 +423,7 @@ case class AnnotateTriplesGen(
   */
 final class CompiledAnnotator(
     m: AnnotatorModel,
-    exp: FusedAnnotate.ExpansionMaps,
+    exp: NativeAnnotate.ExpansionMaps,
     val opts: AnnotateOptions,
     allowedClasses: Option[Set[String]],
     denseLimit: Int) extends Serializable {
@@ -550,7 +575,7 @@ final class CompiledAnnotator(
     }
     if (nD == 0) return Iterator.empty
     // expansions fan out from ALL direct classes (threshold gates emission
-    // of direct rows only — reference parity with FusedAnnotate)
+    // of direct rows only — parity with the Expand join assembly)
     i = 0
     while (i < nD) {
       val id = s.touchedD(i)
@@ -681,7 +706,7 @@ object CompiledAnnotator {
   private val cache = new CompileCache[CompiledAnnotator](8)
 
   def cached(model: Broadcast[AnnotatorModel],
-             maps: Broadcast[FusedAnnotate.ExpansionMaps],
+             maps: Broadcast[NativeAnnotate.ExpansionMaps],
              opts: AnnotateOptions,
              sem: Option[Broadcast[Set[String]]],
              denseLimit: Int): CompiledAnnotator = {

@@ -1,26 +1,20 @@
 package graft.annotate
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{Match, MatchType}
-import graft.dict.{AnnotatorModel, AutomatonBuild, HitBuffer}
+import graft.dict.{AnnotatorModel, AutomatonBuild}
 
 /** SURVEY.md §5's ">driver-memory escape hatch", made real: dictionaries too
   * large to finalize/broadcast as ONE automaton are split into `k` term-id
-  * shards, each built and broadcast independently. Two scan regimes:
-  *
-  *  1. [[annotateDirect]] — single corpus pass, all shard automatons resolved
-  *     per partition. The DRIVER peak drops to one shard at a time (the
-  *     driver-side finalize `Automaton.fromTrie` + the payload collect are
-  *     the build-time memory ceiling — per-shard they are 1/k of it), while
-  *     executors hold all k shards (same total bytes as the single
-  *     automaton, but broadcast as k independently-GC-able blocks).
-  *  2. [[annotateDirectMultiPass]] — k plans unioned, one shard live per
-  *     pass. The corpus is READ k times, so this is the regime for
-  *     dictionaries beyond EXECUTOR memory only; with the broadcasts
-  *     destroyed between passes the resident set is one shard.
+  * shards, each built and broadcast independently. The scan is
+  * [[NativeAnnotate.annotateMatchesSharded]]: one corpus pass, all shard
+  * automatons resolved per task. The DRIVER peak drops to one shard at a
+  * time (the driver-side finalize `Automaton.fromTrie` + the payload collect
+  * are the build-time memory ceiling — per-shard they are 1/k of it), while
+  * executors hold all k shards (same total bytes as the single automaton,
+  * but broadcast as k independently-GC-able blocks).
   *
   * Correctness invariant (spec-pinned in `ShardedSpec`): term-partitioned
   * Aho-Corasick automatons are independent — the union of per-shard hit sets
@@ -63,66 +57,4 @@ object Sharded {
       AutomatonBuild.broadcastModel(spark,
         AutomatonBuild.build(spark, shard, s"$version-shard$sIdx"))
     }
-
-  /** Regime 1: single corpus pass over all shards. Per partition each shard
-    * automaton is resolved once; per document every shard scans into a
-    * reusable per-shard buffer, hits merge into one combined buffer, and the
-    * cross-shard `longest_only` policy runs on the union — byte-identical
-    * semantics to the single-automaton scan (spec-pinned). Map-side only,
-    * zero shuffles, like [[Scan.annotateDirect]]. */
-  def annotateDirect(extracted: DataFrame,
-                     models: Seq[Broadcast[AnnotatorModel]],
-                     longestOnly: Boolean = false,
-                     wholeWord: Boolean = true): Dataset[Match] = {
-    require(models.nonEmpty, "at least one shard model required")
-    val k = models.length
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    extracted.select(col("url"), col("text")).as[(String, String)]
-      .mapPartitions { it =>
-        val ms = models.map(_.value).toArray
-        val shardBuf = new HitBuffer()
-        val comb = new HitBuffer()
-        it.filter(_._2 != null).flatMap { case (url, text) =>
-          comb.clear()
-          var s = 0
-          while (s < k) {
-            // longestOnly deliberately false here — the policy is cross-shard
-            ms(s).automaton.scanInto(text, shardBuf, longestOnly = false, wholeWord)
-            comb.appendFromMapped(shardBuf, k, s) // local ids → global
-            s += 1
-          }
-          if (longestOnly) comb.longestPerStartInPlace()
-          val out = new scala.collection.mutable.ArrayBuffer[Match](comb.size)
-          var i = 0
-          while (i < comb.size) {
-            val from = comb.from(i); val to = comb.to(i); val id = comb.termId(i)
-            val matched = text.substring(from - 1, to) // offsets 1-based inclusive
-            // owner shard = id % k; its payload is indexed by LOCAL id = id / k
-            ms(id % k).payload(id / k).foreach { p =>
-              out += Match(url, from, to, matched, p.classIri, p.ont,
-                if (p.pref) MatchType.Pref else MatchType.Syn)
-            }
-            i += 1
-          }
-          out
-        }
-      }
-  }
-
-  /** Regime 2: k sequential passes (union of per-shard plans) for
-    * dictionaries beyond EXECUTOR memory — only one shard need be resident
-    * per pass (destroy each broadcast between passes when running the
-    * regime for real). Costs k corpus reads; `longest_only` again applies
-    * to the union, here as the declarative window form. */
-  def annotateDirectMultiPass(extracted: DataFrame,
-                              models: Seq[Broadcast[AnnotatorModel]],
-                              longestOnly: Boolean = false,
-                              wholeWord: Boolean = true): DataFrame = {
-    require(models.nonEmpty, "at least one shard model required")
-    val perShard = models.map(m =>
-      Scan.annotateDirect(extracted, m, longestOnly = false, wholeWord).toDF())
-    val unioned = perShard.reduce(_.unionAll(_))
-    if (longestOnly) Filters.longestOnlyWindow(unioned) else unioned
-  }
 }

@@ -1961,7 +1961,11 @@ object KgGraph {
     // `Σc unchanged ⇔ every node unchanged` — one 1-row aggregate over the
     // just-materialized round instead of the former full next⋈prev join +
     // filter + count per round (an extra exchange of the whole label table)
-    var cSum = c.agg(sum(col("c"))).first().getLong(0)
+    // coalesced: an empty or all-self-loop edge set leaves `c` empty, whose
+    // sum is NULL — the total is then 0 and the first round converges
+    def total(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("c")), lit(0L))).first().getLong(0)
+    var cSum = total(c)
     var converged = false
     var i = 0
     val trunc = truncator()
@@ -1980,7 +1984,7 @@ object KgGraph {
             sequence(lit(1L), size(col("vs")).cast("long")),
             (v, i) => least(v, i))).as("c")),
         i + 1)
-      val nextSum = next.agg(sum(col("c"))).first().getLong(0)
+      val nextSum = total(next)
       c = next
       converged = nextSum == cSum
       cSum = nextSum

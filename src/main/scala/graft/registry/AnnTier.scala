@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.annotate.{Corpus, Expand, Filters, Scan, Scoring}
+import graft.annotate.{Corpus, Expand, Filters, Scoring}
 import graft.dict.{AnnotatorModel, AutomatonBuild, DictBuild}
 import graft.emit.Triples
 import graft.fixture.OntologyFixture
@@ -17,7 +17,7 @@ import graft.SparkEntry._
   * moved verbatim out of SparkEntry (round-5 hygiene split; the Seq→Map
   * assembly, duplicate gate and 1:1 queries↔oracles check stay in
   * [[SparkEntry]]). Shared helpers live on SparkEntry as
-  * `private[graft]` members. 34 queries / 34 oracles. */
+  * `private[graft]` members. 32 queries / 32 oracles. */
 private[graft] object AnnTier {
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -25,18 +25,9 @@ private[graft] object AnnTier {
     "ann_direct" -> ((s, dir) =>
       matches(s, dir).select("url", "class_iri", "ont", "match_type").distinct()),
 
-    // A2 on the typed mapPartitions form — same oracle as ann_direct, so
-    // both scan formulations stay independently DuckDB-checked
-    "ann_direct_typed" -> ((s, dir) =>
-      Scan.annotateDirect(corpus(s, dir), model(s)).toDF()
-        .select(col("url"), col("classIri").as("class_iri"), col("ont"),
-          col("matchType").as("match_type")).distinct()),
-
     // S4: sharded-dictionary scan (>driver-memory escape hatch) — 4 term-id
     // shards, one corpus pass, cross-shard longest_only semantics; must
-    // equal the single-automaton result, so it shares ann_direct's oracle.
-    // Runs the NATIVE sharded Generator (the scale path); the typed form
-    // stays parity-tested in ShardedSpec
+    // equal the single-automaton result, so it shares ann_direct's oracle
     "ann_sharded" -> ((s, dir) =>
       graft.annotate.NativeAnnotate
         .annotateMatchesSharded(corpus(s, dir), shardedModels(s))
@@ -51,10 +42,8 @@ private[graft] object AnnTier {
     // match positions from regexp-split segment lengths and applies the
     // per-start-max-end contract as a window filter
     "ann_longest" -> ((s, dir) =>
-      Scan.annotateDirect(corpus(s, dir), model(s), longestOnly = true).toDF()
-        .select(col("url"), col("from"), col("to"), col("text"),
-          col("classIri").as("class_iri"), col("ont"),
-          col("matchType").as("match_type"))),
+      graft.annotate.NativeAnnotate
+        .annotateMatches(corpus(s, dir), model(s), longestOnly = true)),
 
     // accent-folded matching (A1 normalization extension): fold-then-
     // annotate with a 1:1 translate map — same-length fold, so offsets
@@ -163,18 +152,10 @@ private[graft] object AnnTier {
         .select(col("url"), col("classIri").as("class_iri"), col("canon_iri"))),
 
     // A12: the P/R-gate-shaped query — full (subj, pred, obj) triple set,
-    // via the FUSED zero-shuffle path (so the DuckDB oracle checks the scale
-    // path directly; the Catalyst-join legs are oracle-checked separately by
-    // ann_direct / ann_hier / ann_mapped)
+    // via the fused zero-shuffle triple Generator (so the DuckDB oracle
+    // checks it directly; the Catalyst-join legs are oracle-checked
+    // separately by ann_direct / ann_hier / ann_mapped)
     "ann_triples" -> ((s, dir) =>
-      graft.annotate.FusedAnnotate
-        .annotateTriples(corpus(s, dir), model(s), fusedMaps(s), "v1")
-        .toDF().select("subj", "pred", "obj")),
-
-    // A12 on the NATIVE plan (custom Catalyst Generator over in-place
-    // UTF8String bytes — graft.annotate.NativeAnnotate): same oracle as
-    // ann_triples, so DuckDB independently checks the native formulation too
-    "ann_triples_native" -> ((s, dir) =>
       graft.annotate.NativeAnnotate
         .annotateTriples(corpus(s, dir), model(s), fusedMaps(s), "v1")
         .select("subj", "pred", "obj")),
@@ -430,9 +411,6 @@ private[graft] object AnnTier {
     "ann_direct" ->
       s"WITH $dictCte, $directCte SELECT url, class_iri, ont, match_type FROM direct",
 
-    "ann_direct_typed" ->
-      s"WITH $dictCte, $directCte SELECT url, class_iri, ont, match_type FROM direct",
-
     // sharded scan must be indistinguishable from the single-automaton scan
     "ann_sharded" ->
       s"WITH $dictCte, $directCte SELECT url, class_iri, ont, match_type FROM direct",
@@ -463,18 +441,6 @@ private[graft] object AnnTier {
           LEFT JOIN res r ON dr.class_iri = r.class_iri""",
 
     "ann_triples" ->
-      s"""WITH RECURSIVE $dictCte, $edgesCte, $mappingsCte, $directCte, $closureCte
-          SELECT DISTINCT url AS subj, 'hasAnnotation' AS pred, class_iri AS obj FROM direct
-          UNION
-          SELECT DISTINCT dr.url AS subj, 'hasExpandedAnnotation' AS pred, cl.ancestor_iri AS obj
-          FROM (SELECT DISTINCT url, class_iri FROM direct) dr
-          JOIN closure cl ON dr.class_iri = cl.child_iri
-          UNION
-          SELECT DISTINCT dr.url AS subj, 'hasMappedAnnotation' AS pred, m.mapped_iri AS obj
-          FROM (SELECT DISTINCT url, class_iri FROM direct) dr
-          JOIN maps m ON dr.class_iri = m.class_iri""",
-
-    "ann_triples_native" ->
       s"""WITH RECURSIVE $dictCte, $edgesCte, $mappingsCte, $directCte, $closureCte
           SELECT DISTINCT url AS subj, 'hasAnnotation' AS pred, class_iri AS obj FROM direct
           UNION

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.annotate.{Corpus, Expand, Filters, Scan, Scoring}
+import graft.annotate.{Corpus, Expand, Filters, Scoring}
 import graft.dict.{AnnotatorModel, AutomatonBuild, DictBuild}
 import graft.emit.Triples
 import graft.fixture.OntologyFixture

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.annotate.{Corpus, Expand, Filters, Scan, Scoring}
+import graft.annotate.{Corpus, Expand, Filters, Scoring}
 import graft.dict.{AnnotatorModel, AutomatonBuild, DictBuild}
 import graft.emit.Triples
 import graft.fixture.OntologyFixture
@@ -25,9 +25,9 @@ private[graft] object KgTier {
     // release gets (per pred: triple count + distinct subjects/objects);
     // one short-key agg over the fused zero-shuffle triple stream
     "kg_pred_stats" -> ((s, dir) =>
-      graft.annotate.FusedAnnotate
+      graft.annotate.NativeAnnotate
         .annotateTriples(corpus(s, dir), model(s), fusedMaps(s), "v1")
-        .toDF().select("subj", "pred", "obj")
+        .select("subj", "pred", "obj")
         .groupBy("pred")
         .agg(count(lit(1)).as("n_triples"),
           countDistinct(col("subj")).as("n_subjects"),
@@ -38,9 +38,9 @@ private[graft] object KgTier {
     // the object's subject count), the web_degree_dist bit-length
     // bucketing on the KG side
     "kg_obj_degree_dist" -> ((s, dir) =>
-      graft.annotate.FusedAnnotate
+      graft.annotate.NativeAnnotate
         .annotateTriples(corpus(s, dir), model(s), fusedMaps(s), "v1")
-        .toDF().select("subj", "pred", "obj")
+        .select("subj", "pred", "obj")
         .groupBy("pred", "obj")
         .agg(countDistinct(col("subj")).as("deg"))
         .select(col("pred"), (length(bin(col("deg"))) - 1).as("bucket"))

@@ -26,7 +26,7 @@ class IncrementalSpec extends AnyFunSuite {
   private lazy val modelV2 = AutomatonBuild.broadcastModel(spark,
     AutomatonBuild.build(spark, dictV2, "v2"))
   private lazy val maps = spark.sparkContext.broadcast(
-    graft.annotate.FusedAnnotate.expansionMaps(
+    graft.annotate.NativeAnnotate.expansionMaps(
       graft.graph.Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
       OntologyFixture.mappingsDf(spark), 5))
 

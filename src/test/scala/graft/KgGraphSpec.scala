@@ -1288,6 +1288,17 @@ class KgGraphSpec extends AnyFunSuite {
     assert(got2 === got)
   }
 
+  test("coreness: empty and all-self-loop edge sets give an empty result, stable schema") {
+    import spark.implicits._
+    val schema = KgGraph.coreness(Seq(("a", "b")).toDF("src", "dst")).schema
+    for (e <- Seq(Seq.empty[(String, String)].toDF("src", "dst"),
+        Seq(("a", "a"), ("b", "b")).toDF("src", "dst"))) {
+      val got = KgGraph.coreness(e)
+      assert(got.collect().isEmpty)
+      assert(got.schema === schema)
+    }
+  }
+
   test("simRank: hand-unrolled 3 rounds on a crafted digraph + hub cap") {
     import spark.implicits._
     // u→a u→b v→b v→c a→u b→v: I(a)={u} I(b)={u,v} I(c)={v} I(u)={a} I(v)={b}

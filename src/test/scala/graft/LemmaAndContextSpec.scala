@@ -97,8 +97,8 @@ class LemmaAndContextSpec extends AnyFunSuite {
     }
     assert(idDocs.nonEmpty, "need at least one lemma-identity doc in the slice")
     val df = spark.createDataFrame(spark.sparkContext.parallelize(idDocs.toSeq), corpus.schema)
-    val plain = graft.annotate.Scan.annotateDirect(df, plainModel).collect()
-      .map(m => (m.url, m.from, m.to, m.classIri)).toSet
+    val plain = graft.annotate.NativeAnnotate.annotateMatches(df, plainModel).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(4))).toSet
     val lemma = LemmaScan.annotateDirectLemma(df, lemmaModel).collect()
       .map(m => (m.url, m.from, m.to, m.classIri)).toSet
     assert(lemma === plain)
@@ -109,10 +109,10 @@ class LemmaAndContextSpec extends AnyFunSuite {
 
   test("Annotator facade: lemmatize=true == native path over a pre-lemmatized corpus") {
     import org.apache.spark.sql.functions.col
-    import graft.annotate.{FusedAnnotate, NativeAnnotate}
+    import graft.annotate.NativeAnnotate
     import graft.graph.Closure
     val maps = spark.sparkContext.broadcast(
-      FusedAnnotate.expansionMaps(
+      NativeAnnotate.expansionMaps(
         Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
         OntologyFixture.mappingsDf(spark), 5))
     val terms = OntologyFixture.conceptsDf(spark)
@@ -153,11 +153,36 @@ class LemmaAndContextSpec extends AnyFunSuite {
     assert(viaFacade.exists(_._1 == "doc://lem/0"))
   }
 
-  test("Annotator facade: default request routes to the native plan") {
-    import graft.annotate.FusedAnnotate
+  test("Annotator facade: lemmatize=true honors stop_words in lemma space") {
+    import org.apache.spark.sql.functions.col
     import graft.graph.Closure
     val maps = spark.sparkContext.broadcast(
-      FusedAnnotate.expansionMaps(
+      graft.annotate.NativeAnnotate.expansionMaps(
+        Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
+        OntologyFixture.mappingsDf(spark), 5))
+    val term = OntologyFixture.concepts.map(_.prefLabel).sorted.find(t => t.split(' ').forall { w =>
+      val u = w.toUpperCase
+      u.length > 3 && u.forall(_.isLetter) &&
+        Lemma.lemmaToken(u) == u && Lemma.lemmaToken(u + "S") == u
+    }).getOrElse(fail("fixture must contain a lemma-fixpoint term"))
+    val inflected = term.split(' ').map(_ + "s").mkString(" ")
+    val classes = OntologyFixture.concepts.filter(_.prefLabel == term).map(_.classIri).toSet
+    val corpus = docsDf(Seq(s"prefix words then $inflected and a tail"))
+    def direct(stopWords: Seq[String]): Set[String] = Annotator
+      .annotate(corpus, plainModel, maps, "v1",
+        Annotator.Request(AnnotateOptions(stopWords = stopWords), lemmatize = true),
+        lemmaModel = Some(lemmaModel))
+      .filter(col("pred") === Pred.Direct).select("obj").collect().map(_.getString(0)).toSet
+    assert(classes.nonEmpty && classes.subsetOf(direct(Nil)))
+    // the stop word as a user would type it: inflected, upper case, loose spacing
+    val stopped = direct(Seq("  " + inflected.toUpperCase.replace(" ", "  ") + " "))
+    assert(stopped.intersect(classes).isEmpty, s"stop word '$inflected' ignored")
+  }
+
+  test("Annotator facade: default request routes to the native plan") {
+    import graft.graph.Closure
+    val maps = spark.sparkContext.broadcast(
+      graft.annotate.NativeAnnotate.expansionMaps(
         Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
         OntologyFixture.mappingsDf(spark), 5))
     val corpus = graft.annotate.Corpus.extract(

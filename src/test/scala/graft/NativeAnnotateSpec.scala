@@ -2,19 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.annotate.{Corpus, FusedAnnotate, NativeAnnotate}
+import graft.annotate.{Corpus, NativeAnnotate}
 import graft.dict.{AutomatonBuild, DictBuild, TrieBuilder, Automaton}
 import graft.fixture.OntologyFixture
 import graft.graph.Closure
 
-/** The native Generator formulation must be row-for-row identical to the
-  * typed `mapPartitions` fused path — over the full smoke corpus, the whole
-  * request-option matrix, non-ASCII fallback docs, and the sparse-accumulator
-  * branch. Plus: the plan it produces must actually BE native (no
-  * object-mode island), and the byte-level scan must equal the char-level
-  * scan on arbitrary ASCII input.
+/** The fused triple Generator must be row-for-row identical to the join
+  * assembly `Pipeline.run` executes ([[JoinAssembly]]) — over the full
+  * smoke corpus, the whole request-option matrix (one table, one case per
+  * row; a row's name is the option under test), and the sparse-accumulator
+  * branch; on non-ASCII fallback docs it must also equal the scalar oracle.
+  * Plus: the plan it produces must actually BE native (no object-mode
+  * island), and the byte-level scan must equal the char-level scan on
+  * arbitrary ASCII input.
   */
 class NativeAnnotateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -24,67 +27,94 @@ class NativeAnnotateSpec extends AnyFunSuite {
     val dict = DictBuild.build(DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
     AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, "v1"))
   }
+  private lazy val closure =
+    Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5).localCheckpoint()
   private lazy val maps = spark.sparkContext.broadcast(
-    FusedAnnotate.expansionMaps(
-      Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
-      OntologyFixture.mappingsDf(spark), 5))
+    NativeAnnotate.expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
   private lazy val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
+  private lazy val semTable = OntologyFixture.conceptsDf(spark)
+    .select(col("class_iri"), explode(col("tuis")).as("tui"))
 
   private def tripleSet(df: DataFrame): Set[(String, String, String, String, Int, Double, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
       r.getString(3), r.getInt(4), r.getDouble(5), r.getString(6))).toSet
 
-  private def assertParity(opts: AnnotateOptions,
-                           semClasses: Option[Set[String]] = None,
-                           denseLimit: Int = NativeAnnotate.DenseLimit): Unit = {
-    val semB = semClasses.map(spark.sparkContext.broadcast(_))
-    val fused = tripleSet(
-      FusedAnnotate.annotateTriples(corpus, model, maps, "v1", opts, semB).toDF())
-    val native = tripleSet(
+  /** Join-assembly reference over the same scan-time options; TUIs go
+    * through the `(class_iri, tui)` semi-join, as in the pipeline. */
+  private def joinAssembly(df: DataFrame, opts: AnnotateOptions,
+                           tuis: Seq[String] = Nil) =
+    tripleSet(JoinAssembly.triples(
+      NativeAnnotate.annotateMatches(df, model, opts.longestOnly, opts.wholeWordOnly),
+      opts.copy(semanticTypes = tuis), closure, OntologyFixture.mappingsDf(spark),
+      Some(semTable)))
+
+  /** The fused triple Generator over the smoke corpus; TUIs reach it as
+    * the resolved class set. */
+  private def native(opts: AnnotateOptions, tuis: Seq[String] = Nil,
+                     denseLimit: Int = NativeAnnotate.DenseLimit) = {
+    val semB = if (tuis.isEmpty) None else Some(spark.sparkContext.broadcast(
+      OntologyFixture.concepts.filter(_.tuis.exists(tuis.contains)).map(_.classIri).toSet))
+    tripleSet(
       NativeAnnotate.annotateTriples(corpus, model, maps, "v1", opts, semB, denseLimit))
-    assert(native === fused)
-    assert(native.nonEmpty)
   }
 
-  test("native == fused on the full smoke corpus (defaults)") {
-    assertParity(AnnotateOptions())
+  /** Native triples == join assembly, plus per-row option invariants.
+    * Returns the native set for extra checks. */
+  private def assertParity(opts: AnnotateOptions, tuis: Seq[String] = Nil,
+                           denseLimit: Int = NativeAnnotate.DenseLimit) = {
+    val got = native(opts, tuis, denseLimit)
+    assert(got === joinAssembly(corpus, opts, tuis))
+    assert(got.nonEmpty)
+    got.foreach { case (_, pred, _, _, dist, score, _) =>
+      assert(score >= opts.scoreThreshold)
+      assert(pred != Pred.Expanded || (opts.expandHierarchy && dist <= opts.hierarchyMaxLevel))
+      assert(pred != Pred.Mapped || opts.expandMappings)
+    }
+    got
   }
 
-  test("native == fused: longest_only") {
-    assertParity(AnnotateOptions(longestOnly = true))
-  }
+  private def directPairs(triples: Set[(String, String, String, String, Int, Double, String)]) =
+    triples.collect { case (u, Pred.Direct, c, _, _, _, _) => (u, c) }
 
-  test("native == fused: ontology whitelist") {
-    assertParity(AnnotateOptions(ontologies = Seq("ONT2")))
-  }
-
-  test("native == fused: exclude_synonyms") {
-    assertParity(AnnotateOptions(excludeSynonyms = true))
-  }
-
-  test("native == fused: score threshold") {
-    assertParity(AnnotateOptions(scoreThreshold = 8.5))
-  }
-
-  test("native == fused: hierarchy level cap + no mappings") {
-    assertParity(AnnotateOptions(hierarchyMaxLevel = 1, expandMappings = false))
-  }
-
-  test("native == fused: no hierarchy") {
-    assertParity(AnnotateOptions(expandHierarchy = false))
-  }
-
-  test("native == fused: semantic-type class filter") {
-    val allowed = OntologyFixture.conceptsDf(spark)
-      .select("class_iri").limit(10).collect().map(_.getString(0)).toSet
-    assertParity(AnnotateOptions(), Some(allowed))
-  }
-
-  test("native == fused: stop_words blacklist (incl. normalization + non-term no-op)") {
+  /** The request-option matrix: (case name, options, semantic-type TUIs). */
+  private val optionMatrix: Seq[(String, AnnotateOptions, Seq[String])] = Seq(
+    ("native == fused on the full smoke corpus (defaults)", AnnotateOptions(), Nil),
+    ("native == fused: longest_only", AnnotateOptions(longestOnly = true), Nil),
+    ("native == fused: ontology whitelist", AnnotateOptions(ontologies = Seq("ONT2")), Nil),
+    ("native == fused: exclude_synonyms", AnnotateOptions(excludeSynonyms = true), Nil),
+    ("native == fused: score threshold", AnnotateOptions(scoreThreshold = 8.5), Nil),
+    ("native == fused: hierarchy level cap + no mappings",
+      AnnotateOptions(hierarchyMaxLevel = 1, expandMappings = false), Nil),
+    ("native == fused: no hierarchy", AnnotateOptions(expandHierarchy = false), Nil),
+    ("native == fused: semantic-type class filter", AnnotateOptions(),
+      Seq("T050", "T051", "T052")),
     // un-normalized entries ("  Table  Scan ", mixed case) must resolve, a
     // non-dictionary entry ("nonsense term") must be a no-op
-    assertParity(AnnotateOptions(
-      stopWords = Seq("data", "  Table  Scan ", "nonsense term")))
+    ("native == fused: stop_words blacklist (incl. normalization + non-term no-op)",
+      AnnotateOptions(stopWords = Seq("data", "  Table  Scan ", "nonsense term")), Nil),
+    ("native == fused: combined options", AnnotateOptions(longestOnly = true,
+      excludeSynonyms = true, hierarchyMaxLevel = 2, scoreThreshold = 3.0), Nil),
+    ("native == fused: whole_word_only=false (substring matching)",
+      AnnotateOptions(wholeWordOnly = false), Nil))
+
+  optionMatrix.foreach { case (name, opts, tuis) =>
+    test(name) { assertParity(opts, tuis) }
+  }
+
+  test("option matrix is live: filters narrow the direct set, level cap reaches its level") {
+    val defaults = native(AnnotateOptions())
+    val all = directPairs(defaults)
+    assert(directPairs(native(AnnotateOptions(longestOnly = true))).subsetOf(all))
+    val ont2 = directPairs(native(AnnotateOptions(ontologies = Seq("ONT2"))))
+    assert(ont2.nonEmpty && ont2.subsetOf(all) && ont2 != all)
+    // synonym hits drop out of the direct scores
+    val noSyn = native(AnnotateOptions(excludeSynonyms = true))
+    assert(directPairs(noSyn).subsetOf(all) && noSyn != defaults)
+    assert(native(AnnotateOptions(hierarchyMaxLevel = 1))
+      .exists(t => t._2 == Pred.Expanded && t._5 == 1))
+    // threshold 9 keeps PREF-scored directs, drops lone-SYN directs + all expansions
+    val t9 = native(AnnotateOptions(scoreThreshold = 9.0))
+    assert(t9.nonEmpty && t9.forall(_._2 == Pred.Direct))
   }
 
   test("stop_words actually removes the stopped term's classes (native)") {
@@ -118,15 +148,6 @@ class NativeAnnotateSpec extends AnyFunSuite {
       Seq("url", "from", "to", "text", "class_iri", "ont", "match_type"))
   }
 
-  test("native == fused: combined options") {
-    assertParity(AnnotateOptions(longestOnly = true, excludeSynonyms = true,
-      hierarchyMaxLevel = 2, scoreThreshold = 3.0))
-  }
-
-  test("native == fused: whole_word_only=false (substring matching)") {
-    assertParity(AnnotateOptions(wholeWordOnly = false))
-  }
-
   test("whole_word_only=false finds mid-word occurrences; true suppresses them") {
     val trie = new TrieBuilder
     trie.insert("ASH", 0)
@@ -148,8 +169,9 @@ class NativeAnnotateSpec extends AnyFunSuite {
   }
 
   test("sparse accumulator branch (denseLimit=0) == dense") {
-    assertParity(AnnotateOptions(), denseLimit = 0)
-    assertParity(AnnotateOptions(longestOnly = true, scoreThreshold = 8.5), denseLimit = 0)
+    for (opts <- Seq(AnnotateOptions(),
+        AnnotateOptions(longestOnly = true, scoreThreshold = 8.5)))
+      assert(assertParity(opts, denseLimit = 0) === native(opts))
   }
 
   test("non-ASCII documents fall back to the char scan with identical results") {
@@ -167,9 +189,10 @@ class NativeAnnotateSpec extends AnyFunSuite {
       .map { case (t, i) => (s"doc://nonascii/$i", new java.sql.Timestamp(0L),
         null.asInstanceOf[Array[Byte]], t, "und") }
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val fused = tripleSet(FusedAnnotate.annotateTriples(df, model, maps, "v1").toDF())
     val native = tripleSet(NativeAnnotate.annotateTriples(df, model, maps, "v1"))
-    assert(native === fused)
+    assert(native === joinAssembly(df, AnnotateOptions()))
+    assert(native.map(t => (t._1, t._2, t._3)) === graft.oracle.ReferenceOracle
+      .goldenTriples(texts.zipWithIndex.map { case (t, i) => (s"doc://nonascii/$i", t) }))
     assert(native.nonEmpty, "non-ASCII fixture should still produce matches")
   }
 
@@ -222,24 +245,8 @@ class NativeAnnotateSpec extends AnyFunSuite {
     }
   }
 
-  private def matchSet(df: DataFrame): Set[(String, Int, Int, String, String, String, String)] =
-    df.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
-      r.getString(4), r.getString(5), r.getString(6))).toSet
-
-  test("annotateMatches == typed Scan.annotateDirect (offsets, text, payload fan-out)") {
-    import graft.annotate.Scan
-    for (longest <- Seq(false, true)) {
-      val typed = matchSet(Scan.annotateDirect(corpus, model, longest).toDF()
-        .select("url", "from", "to", "text", "classIri", "ont", "matchType"))
-      val native = matchSet(NativeAnnotate.annotateMatches(corpus, model, longest))
-      assert(native === typed, s"longestOnly=$longest")
-      assert(native.nonEmpty)
-    }
-  }
-
   test("annotateMatches parity on non-ASCII docs (char-offset coordinates)") {
     import spark.implicits._
-    import graft.annotate.Scan
     val terms = OntologyFixture.conceptsDf(spark)
       .select("pref_label").limit(3).collect().map(_.getString(0))
     val texts = Seq(
@@ -249,10 +256,14 @@ class NativeAnnotateSpec extends AnyFunSuite {
       .map { case (t, i) => (s"doc://na/$i", new java.sql.Timestamp(0L),
         null.asInstanceOf[Array[Byte]], t, "und") }
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val typed = matchSet(Scan.annotateDirect(df, model).toDF()
-      .select("url", "from", "to", "text", "classIri", "ont", "matchType"))
-    val native = matchSet(NativeAnnotate.annotateMatches(df, model))
-    assert(native === typed)
+    // reference: the naive scalar matcher over the Java String (UTF-16 chars)
+    val expected = texts.zipWithIndex.flatMap { case (t, i) =>
+      graft.oracle.ReferenceOracle.directMatches(s"doc://na/$i", t)
+    }.map(m => (m.url, m.from, m.to, m.text, m.classIri, m.ont, m.matchType)).toSet
+    val native = NativeAnnotate.annotateMatches(df, model).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
+        r.getString(4), r.getString(5), r.getString(6))).toSet
+    assert(native === expected)
     assert(native.nonEmpty)
   }
 

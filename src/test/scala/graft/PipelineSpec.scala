@@ -30,15 +30,16 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("offset-level match parity vs scalar oracle over the whole sf0.001 corpus") {
-    import graft.annotate.{Corpus, Scan}
+    import graft.annotate.{Corpus, NativeAnnotate}
     import graft.dict.{AutomatonBuild, DictBuild}
     import graft.fixture.OntologyFixture
     val dict = DictBuild.build(DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
     val model = AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, "v1"))
     val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
     for (longest <- Seq(false, true)) {
-      val got = Scan.annotateDirect(corpus, model, longest).collect()
-        .map(m => (m.url, m.from, m.to, m.text, m.classIri, m.ont, m.matchType)).toSet
+      val got = NativeAnnotate.annotateMatches(corpus, model, longest).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
+          r.getString(4), r.getString(5), r.getString(6))).toSet
       val want = corpus.select("url", "text").collect().flatMap { r =>
         graft.oracle.ReferenceOracle.directMatches(r.getString(0), r.getString(1), longest)
           .map(m => (m.url, m.from, m.to, m.text, m.classIri, m.ont, m.matchType))
@@ -81,7 +82,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("HTML corpus end-to-end: null-text rows extract from html and annotate") {
     import spark.implicits._
-    import graft.annotate.{Corpus, FusedAnnotate}
+    import graft.annotate.{Corpus, NativeAnnotate}
     import graft.dict.{AutomatonBuild, DictBuild}
     import graft.fixture.OntologyFixture
     import graft.graph.Closure
@@ -97,10 +98,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(texts("http://b") === "merge sort beats a table scan") // verbatim
     val dict = DictBuild.build(DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
     val model = AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, "v1"))
-    val maps = spark.sparkContext.broadcast(FusedAnnotate.expansionMaps(
+    val maps = spark.sparkContext.broadcast(NativeAnnotate.expansionMaps(
       Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5),
       OntologyFixture.mappingsDf(spark), 5))
-    val got = FusedAnnotate.annotateTriples(extracted, model, maps, "v1").toDF()
+    val got = NativeAnnotate.annotateTriples(extracted, model, maps, "v1")
       .select("subj", "pred", "obj").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     val expected = ReferenceOracle.goldenTriples(
@@ -329,9 +330,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("fused zero-shuffle annotate == Catalyst-join annotate == oracle") {
-    import graft.annotate.{Corpus, Expand, FusedAnnotate, Scan, ScanAgg, Scoring}
+    import graft.annotate.{Corpus, NativeAnnotate}
     import graft.dict.{AutomatonBuild, DictBuild}
-    import graft.emit.Triples
     import graft.fixture.OntologyFixture
     import graft.graph.Closure
     val dict = DictBuild.build(DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
@@ -340,28 +340,23 @@ class PipelineSpec extends AnyFunSuite {
     val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
 
     // Catalyst-join formulation over per-occurrence matches
-    val m = Scan.annotateDirect(corpus, model).toDF()
-    val joined = Triples.assemble(
-      Scoring.directScores(m),
-      Expand.hierarchy(m, closure, 5),
-      Expand.mappings(m, OntologyFixture.mappingsDf(spark)), "v1")
+    val joined = JoinAssembly.triples(NativeAnnotate.annotateMatches(corpus, model),
+      AnnotateOptions(), closure, OntologyFixture.mappingsDf(spark))
     // fused map-only formulation
     val maps = spark.sparkContext.broadcast(
-      FusedAnnotate.expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
-    val fused = FusedAnnotate.annotateTriples(corpus, model, maps, "v1").toDF()
+      NativeAnnotate.expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
+    val fused = NativeAnnotate.annotateTriples(corpus, model, maps, "v1")
 
     def full(df: org.apache.spark.sql.DataFrame) =
       df.select("subj", "pred", "obj", "match_type", "distance", "score")
         .collect().map(_.toSeq).toSet
     assert(full(fused) === full(joined))
-    // and the aggregated-scan variant agrees with groupBy scoring
-    val agg = ScanAgg.annotateDirectAgg(corpus, model).toDF()
-      .select("url", "classIri", "match_type", "n_matches", "score")
-      .collect().map(_.toSeq).toSet
-    val grouped = Scoring.directScores(m)
-      .select("url", "classIri", "match_type", "n_matches", "score")
-      .collect().map(_.toSeq).toSet
-    assert(agg === grouped)
+    // and both equal the scalar oracle's (subj, pred, obj) set
+    val docs = corpus.select("url", "text").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val spo = full(fused).map(r => (r(0), r(1), r(2)))
+    assert(spo === ReferenceOracle.goldenTriples(docs).map(t => (t._1, t._2, t._3)))
+    assert(spo.nonEmpty)
   }
 
   test("pipeline triples match the oracle too (flagship entry path)") {

@@ -14,6 +14,17 @@ class PlanContractSpec extends AnyFunSuite {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  test("annotate scans plan as a native Generate — no object-mode island") {
+    val plans = Seq("ann_longest", "ann_triples", "ann_sharded", "kg_pred_stats",
+      "kg_obj_degree_dist").map(q => q -> plan(q)) :+
+      ("SparkEntry.entry" -> SparkEntry.entry(spark).queryExecution.executedPlan.toString)
+    for ((q, p) <- plans) {
+      assert(p.contains("Generate"), s"$q:\n$p")
+      assert(!p.contains("MapPartitions"), s"$q:\n$p")
+      assert(!p.contains("DeserializeToObject"), s"$q:\n$p")
+    }
+  }
+
   test("text_quality: exact-rational scorer stays a map-only projection — " +
       "no exchange, no join, no expensive fallback from the integer form") {
     val p = plan("text_quality")

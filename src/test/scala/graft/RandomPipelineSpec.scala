@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.annotate.{FusedAnnotate, NativeAnnotate}
+import graft.annotate.NativeAnnotate
 import graft.dict.{AutomatonBuild, DictBuild, NaiveMatcher}
 import graft.graph.Closure
 
@@ -67,7 +67,7 @@ class RandomPipelineSpec extends AnyFunSuite {
         else Closure.transitiveClosure(edgesDf, maxLevel)
       val mappingsDf = mappings.toDF("class_iri", "mapped_iri", "kind")
       val maps = spark.sparkContext.broadcast(
-        FusedAnnotate.expansionMaps(closureDf, mappingsDf, maxLevel))
+        NativeAnnotate.expansionMaps(closureDf, mappingsDf, maxLevel))
       val corpusDf = docs.map { case (u, t) =>
         (u, new java.sql.Timestamp(0L), null.asInstanceOf[Array[Byte]], t, "en")
       }.toDF("url", "warc_ts", "html", "text", "lang")

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.annotate.{Corpus, Scan, Sharded}
+import graft.annotate.{Corpus, NativeAnnotate, Sharded}
 import graft.dict.{AutomatonBuild, DictBuild}
 import graft.fixture.OntologyFixture
 
@@ -24,9 +24,20 @@ class ShardedSpec extends AnyFunSuite {
   private lazy val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
 
   private def asSet(ds: org.apache.spark.sql.DataFrame): Set[(String, Int, Int, String, String, String)] =
-    ds.select("url", "from", "to", "classIri", "ont", "matchType").collect()
+    ds.select("url", "from", "to", "class_iri", "ont", "match_type").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getString(3), r.getString(4), r.getString(5))).toSet
+
+  /** Native sharded Generator == native single-automaton Generator for all
+    * four longestOnly × wholeWord combinations. */
+  private def assertShardedParity(models: Seq[org.apache.spark.broadcast.Broadcast[
+      graft.dict.AnnotatorModel]]): Unit =
+    for (longest <- Seq(false, true); whole <- Seq(true, false)) {
+      val single = asSet(NativeAnnotate.annotateMatches(corpus, model, longest, whole))
+      val shard = asSet(NativeAnnotate.annotateMatchesSharded(corpus, models, longest, whole))
+      assert(shard === single, s"k=${models.length} longestOnly=$longest wholeWord=$whole")
+      assert(shard.nonEmpty)
+    }
 
   test("shards partition the dictionary (disjoint, complete, O(N/k) payloads)") {
     val k = 4
@@ -48,37 +59,11 @@ class ShardedSpec extends AnyFunSuite {
   }
 
   test("single-pass sharded scan == single automaton (all 4 option combos)") {
-    for (longest <- Seq(false, true); whole <- Seq(true, false)) {
-      val single = asSet(Scan.annotateDirect(corpus, model, longest, whole).toDF())
-      val shard = asSet(Sharded.annotateDirect(corpus, sharded, longest, whole).toDF())
-      assert(shard === single, s"longestOnly=$longest wholeWord=$whole")
-      assert(shard.nonEmpty)
-    }
-  }
-
-  test("multi-pass sharded scan == single automaton (incl. longest_only)") {
-    for (longest <- Seq(false, true)) {
-      val single = asSet(Scan.annotateDirect(corpus, model, longest).toDF())
-      val multi = asSet(Sharded.annotateDirectMultiPass(corpus, sharded, longest))
-      assert(multi === single, s"longestOnly=$longest")
-    }
-  }
-
-  test("NATIVE sharded Generator == typed sharded scan (all 4 option combos)") {
-    for (longest <- Seq(false, true); whole <- Seq(true, false)) {
-      val typed = asSet(Sharded.annotateDirect(corpus, sharded, longest, whole).toDF())
-      val native = graft.annotate.NativeAnnotate
-        .annotateMatchesSharded(corpus, sharded, longest, whole)
-        .select("url", "from", "to", "class_iri", "ont", "match_type")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
-          r.getString(3), r.getString(4), r.getString(5))).toSet
-      assert(native === typed, s"longestOnly=$longest wholeWord=$whole")
-      assert(native.nonEmpty)
-    }
+    assertShardedParity(sharded)
   }
 
   test("native sharded plan has no object-mode island") {
-    val df = graft.annotate.NativeAnnotate.annotateMatchesSharded(corpus, sharded)
+    val df = NativeAnnotate.annotateMatchesSharded(corpus, sharded)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("Generate"), plan)
     assert(!plan.contains("DeserializeToObject"), "object-mode island in native sharded plan")
@@ -93,12 +78,8 @@ class ShardedSpec extends AnyFunSuite {
   }
 
   test("shard-count robustness: k=1 (degenerate) and k=7 (uneven) still match") {
-    val single = asSet(Scan.annotateDirect(corpus, model, longestOnly = true).toDF())
-    for (k <- Seq(1, 7)) {
-      val models = Sharded.buildModels(spark, dict, "v1", numShards = k)
-      val got = asSet(Sharded.annotateDirect(corpus, models, longestOnly = true).toDF())
-      assert(got === single, s"numShards=$k")
-    }
+    for (k <- Seq(1, 7))
+      assertShardedParity(Sharded.buildModels(spark, dict, "v1", numShards = k))
   }
 
   test("ShardedDictionaryRecognizer == DictionaryRecognizer through the facade seam") {
@@ -120,9 +101,9 @@ class ShardedSpec extends AnyFunSuite {
     // semantics; assert the corpora differ somewhere so the test is live
     import spark.implicits._
     val perShardLongest = sharded
-      .map(m => asSet(Scan.annotateDirect(corpus, m, longestOnly = true).toDF()))
+      .map(m => asSet(NativeAnnotate.annotateMatches(corpus, m, longestOnly = true)))
       .reduce(_ union _)
-    val correct = asSet(Sharded.annotateDirect(corpus, sharded, longestOnly = true).toDF())
+    val correct = asSet(NativeAnnotate.annotateMatchesSharded(corpus, sharded, longestOnly = true))
     assert(correct.subsetOf(perShardLongest))
     assert(perShardLongest !== correct,
       "fixture corpus has no cross-shard overlap — longest_only semantics unpinned; " +

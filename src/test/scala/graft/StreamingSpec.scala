@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming annotate: fused scan lifts to readStream unchanged") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    import graft.annotate.FusedAnnotate
+    import graft.annotate.NativeAnnotate
     import graft.dict.{AutomatonBuild, DictBuild}
     import graft.fixture.OntologyFixture
     import graft.graph.Closure
@@ -125,11 +125,11 @@ class StreamingSpec extends AnyFunSuite {
     val model = AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, "v1"))
     val closure = Closure.transitiveClosure(OntologyFixture.edgesDf(spark), 5)
     val maps = spark.sparkContext.broadcast(
-      FusedAnnotate.expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
+      NativeAnnotate.expansionMaps(closure, OntologyFixture.mappingsDf(spark), 5))
 
     val input = MemoryStream[(String, String)]
     val docs = input.toDF().toDF("url", "text")
-    val query = FusedAnnotate.annotateTriples(docs, model, maps, "v1").writeStream
+    val query = NativeAnnotate.annotateTriples(docs, model, maps, "v1").writeStream
       .format("memory").queryName("stream_triples").outputMode("append").start()
     try {
       input.addData(("doc://s1", "the hash join beats a merge sort"))
