@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 
-import graft.annotate.{ContextScan, Lemma, NativeAnnotate}
+import graft.annotate.{Lemma, NativeAnnotate}
 import graft.dict.AnnotatorModel
 
 /** Single user-facing entry point mirroring the reference's
@@ -22,7 +22,7 @@ import graft.dict.AnnotatorModel
   * | `expand_mappings`         | `AnnotateOptions.expandMappings`          |
   * | `score` / `score_threshold` | weights in [[Score]] / `scoreThreshold` |
   * | `lemmatize` (Annotator+)  | `Request.lemmatize` (lemma-built model)   |
-  * | `negation`/`experiencer`/`temporality` (Annotator+) | `Request.withContext` |
+  * | `negation`/`experiencer`/`temporality` (Annotator+) | [[annotateWithContext]] |
   * | `min_term_size` / `exclude_numbers` | dictionary-build-time ([[graft.dict.DictBuild]]) |
   *
   * Input: the extracted corpus `(url, text, …)`. Output: the normalized
@@ -31,8 +31,10 @@ import graft.dict.AnnotatorModel
   */
 object Annotator {
 
-  /** A complete annotation request. `lemmatize=true` requires `lemmaModel`
-    * (built by [[graft.dict.DictBuild.buildLemmatized]]) — enforced loudly. */
+  /** A complete annotation request. `lemmatize=true` scans in lemma space
+    * with a model built by [[graft.dict.DictBuild.buildLemmatized]]: the
+    * `lemmaModel` argument of [[annotate]], the `model` argument of
+    * [[matches]] and [[annotateWithContext]]. */
   case class Request(
       opts: AnnotateOptions = AnnotateOptions(),
       lemmatize: Boolean = false,
@@ -51,11 +53,13 @@ object Annotator {
   }
 
   /** The default recognizer: the broadcast-automaton dictionary scan on the
-    * native Catalyst plan. */
-  final class DictionaryRecognizer(model: Broadcast[AnnotatorModel]) extends Recognizer {
+    * native Catalyst plan; `lemmatize` scans in lemma space with a
+    * lemma-built `model`. */
+  final class DictionaryRecognizer(model: Broadcast[AnnotatorModel],
+                                   lemmatize: Boolean = false) extends Recognizer {
     override def recognize(extracted: DataFrame, opts: AnnotateOptions): DataFrame =
       NativeAnnotate.annotateMatches(extracted, model,
-        opts.longestOnly, opts.wholeWordOnly)
+        opts.longestOnly, opts.wholeWordOnly, lemmatize)
   }
 
   /** The >driver-memory regime behind the same seam: a dictionary too large
@@ -132,13 +136,19 @@ object Annotator {
 
   /** Corpus → per-occurrence matches with 1-based inclusive offsets
     * (reference mgrep wire shape). Routes through the [[Recognizer]] seam —
-    * the dictionary recognizer by default. */
+    * the dictionary recognizer by default. `request.lemmatize` is a
+    * dictionary-scan option: it needs a lemma-built `model` and cannot be
+    * honored by a caller-supplied recognizer. */
   def matches(extracted: DataFrame,
               model: Broadcast[AnnotatorModel],
               request: Request = Request(),
-              recognizer: Option[Recognizer] = None): DataFrame =
-    recognizer.getOrElse(new DictionaryRecognizer(model))
+              recognizer: Option[Recognizer] = None): DataFrame = {
+    require(!(request.lemmatize && recognizer.nonEmpty),
+      "lemmatize=true is an option of the dictionary scan; a caller-supplied " +
+        "recognizer cannot honor it")
+    recognizer.getOrElse(new DictionaryRecognizer(model, request.lemmatize))
       .recognize(extracted, request.opts)
+  }
 
   /** The reference's `score` mode dispatch over a per-occurrence match
     * stream `(url, classIri, matchType, text, …)`: old (Σ PREF/SYN weights),
@@ -161,10 +171,12 @@ object Annotator {
     }
   }
 
-  /** Corpus → matches with Annotator+ clinical-context attributes. */
+  /** Corpus → matches with Annotator+ clinical-context attributes
+    * (`negated`, `experiencer`, `temporality`); `request.lemmatize` scans
+    * in lemma space with a lemma-built `model`. */
   def annotateWithContext(extracted: DataFrame,
                           model: Broadcast[AnnotatorModel],
                           request: Request = Request()): DataFrame =
-    ContextScan.annotateWithContext(extracted, model,
-      request.opts.longestOnly, request.opts.wholeWordOnly).toDF()
+    NativeAnnotate.annotateMatches(extracted, model, request.opts.longestOnly,
+      request.opts.wholeWordOnly, request.lemmatize, context = true)
 }

@@ -19,7 +19,8 @@ import graft.io.TableIO
   * Stage → shuffle map (scale design, SURVEY.md §4.3):
   *   dict     — ontology-side only, tiny; range-partitioned two-pass term ids
   *   corpus   — extraction is map-only; S2 range repartition = 1 shuffle
-  *   matches  — broadcast automaton + mapPartitions: ZERO shuffles
+  *   matches  — broadcast automaton in the native match Generator: ZERO
+  *              shuffles
   *   closure  — iterative broadcast joins, ontology-side only
   *   triples  — A6 agg (shuffle on url,classIri — high-cardinality keys, no
   *              hot key), expansion joins all broadcast, partitioned write

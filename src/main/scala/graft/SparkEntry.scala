@@ -216,10 +216,9 @@ object SparkEntry {
       .join(umap, "doc_url")
       .select(col("subj"), col("class_iri").as("obj"),
         lit("direct").as("extractor"))
-    val lEv = graft.annotate.LemmaScan
-      .annotateDirectLemma(corpus(s, dir), lemmaModel(s)).toDF()
-      .select(col("url").as("doc_url"),
-        col("classIri").as("class_iri")).distinct()
+    val lEv = graft.annotate.NativeAnnotate
+      .annotateMatches(corpus(s, dir), lemmaModel(s), lemmatize = true)
+      .select(col("url").as("doc_url"), col("class_iri")).distinct()
       .join(umap, "doc_url")
       .select(col("subj"), col("class_iri").as("obj"),
         lit("lemma").as("extractor"))

@@ -1,18 +1,12 @@
 package graft.annotate
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
-
-import graft.MatchType
-import graft.dict.AnnotatorModel
-
 /** Annotator+ clinical-context detection (Tchechmedjiev et al. 2018: the
   * LIRMM fork wraps each annotation with NegEx/ConText-style attributes —
   * negation, experiencer, temporality). The reference delegates to the
   * ConText library over the request text; this engine runs the same
-  * trigger-window algorithm inside the scan pass while the document text is
-  * in hand — no extra join, no shuffle.
+  * trigger-window algorithm per hit inside the match Generator
+  * (`NativeAnnotate.annotateMatches(context = true)`) while the document
+  * text is in hand — no extra join, no shuffle.
   *
   * Algorithm (ConText-lite, deterministic): look at up to [[Context.Window]]
   * tokens immediately BEFORE the match (and one token after for post-hoc
@@ -100,49 +94,5 @@ object Context {
     }
     if (!negated && experiencer == "PATIENT" && temporality == "RECENT") Affirmed
     else Attrs(negated, experiencer, temporality)
-  }
-}
-
-/** Match + context attributes, the Annotator+ annotation shape. */
-case class ContextMatch(url: String, from: Int, to: Int, text: String,
-                        classIri: String, ont: String, matchType: String,
-                        negated: Boolean, experiencer: String, temporality: String)
-
-object ContextScan {
-
-  /** Direct annotation with clinical-context attributes — the dictionary
-    * scan plus per-hit [[Context.classify]] while the document text is in
-    * hand (zero extra shuffles). */
-  def annotateWithContext(extracted: DataFrame,
-                          model: Broadcast[AnnotatorModel],
-                          longestOnly: Boolean = false,
-                          wholeWord: Boolean = true): Dataset[ContextMatch] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    extracted.select(col("url"), col("text")).as[(String, String)]
-      .mapPartitions { it =>
-        val m = model.value
-        val automaton = m.automaton
-        val payload = m.payload
-        val buf = new graft.dict.HitBuffer()
-        it.filter(_._2 != null).flatMap { case (url, text) =>
-          automaton.scanInto(text, buf, longestOnly, wholeWord)
-          val out = new scala.collection.mutable.ArrayBuffer[ContextMatch](buf.size)
-          var i = 0
-          while (i < buf.size) {
-            val from = buf.from(i)
-            val to = buf.to(i)
-            val attrs = Context.classify(text, from, to)
-            val matched = text.substring(from - 1, to)
-            payload(buf.termId(i)).foreach { p =>
-              out += ContextMatch(url, from, to, matched, p.classIri, p.ont,
-                if (p.pref) MatchType.Pref else MatchType.Syn,
-                attrs.negated, attrs.experiencer, attrs.temporality)
-            }
-            i += 1
-          }
-          out
-        }
-      }
   }
 }

@@ -98,8 +98,8 @@ object Incremental {
                    v1Matches: DataFrame, upd: DictUpdate,
                    wholeWord: Boolean = true,
                    lemma: Boolean = false): DataFrame = {
-    // accept both the native snake_case match stream and the typed
-    // Dataset[Match] camelCase one
+    // accept both the match Generator's snake_case columns and the
+    // persisted matches stage's camelCase ones
     val m = Seq("classIri" -> "class_iri", "matchType" -> "match_type")
       .foldLeft(v1Matches) { case (df, (a, b)) =>
         if (df.columns.contains(a)) df.withColumnRenamed(a, b) else df
@@ -144,11 +144,8 @@ object Incremental {
           minTermSize = 1, excludeNumbers = false)
         val model = AutomatonBuild.broadcastModel(spark,
           AutomatonBuild.build(spark, addedDict, "delta"))
-        if (lemma)
-          LemmaScan.annotateDirectLemma(corpus, model).toDF().select(col("url"))
-        else
-          NativeAnnotate.annotateMatches(corpus, model, wholeWord = wholeWord)
-            .select(col("url"))
+        NativeAnnotate.annotateMatches(corpus, model, wholeWord = wholeWord,
+          lemmatize = lemma).select(col("url"))
       }
     removedHits.unionByName(addedHits).distinct()
   }

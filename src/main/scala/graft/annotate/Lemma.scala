@@ -9,7 +9,9 @@ import scala.collection.mutable
   * uses a deterministic, self-contained suffix stripper — a stand-in with
   * the same pipeline shape (normalize both sides with the SAME function,
   * match in lemma space, report ORIGINAL-text offsets). Swapping in a real
-  * lemma table is a broadcast-map change, not an architecture change.
+  * lemma table is a broadcast-map change, not an architecture change. The
+  * scan is `NativeAnnotate.annotateMatches(lemmatize = true)` with a
+  * [[graft.dict.DictBuild.buildLemmatized]] model.
   *
   * Offset mapping: the lemmatized text preserves every non-word separator
   * byte verbatim and replaces each word run by its lemma, so lemma-space
@@ -137,55 +139,5 @@ object Lemma {
     val tFrom = d.tokenAtL(fromL - 1)
     val tTo = d.tokenAtL(toL - 1)
     (d.tokStartO(tFrom) + 1, d.tokEndO(tTo)) // end exclusive → 1-based inclusive
-  }
-}
-
-/** Lemmatized annotation path (Annotator+ `lemmatize=true`): scan in lemma
-  * space, report original offsets + original matched text. The typed
-  * mapPartitions form — lemma mode is an opt-in request feature, not the
-  * default scale path, and the per-doc token maps are inherently object-y. */
-object LemmaScan {
-
-  import org.apache.spark.broadcast.Broadcast
-  import org.apache.spark.sql.{DataFrame, Dataset}
-  import graft.{Match, MatchType}
-  import graft.dict.AnnotatorModel
-
-  /** Direct annotation in lemma space. `model` must be built from a
-    * LEMMATIZED dictionary ([[graft.dict.DictBuild.buildLemmatized]]) — the
-    * both-sides-same-function invariant the reference's lemmatizer gives.
-    * Lemma mode is whole-word BY CONSTRUCTION: the offset back-mapping
-    * relies on hits being token-aligned, so `whole_word_only=false` cannot
-    * be combined with lemmatization (the reference's lemmatizer has the
-    * same implicit constraint — it operates on tokens). */
-  def annotateDirectLemma(extracted: DataFrame,
-                          model: Broadcast[AnnotatorModel],
-                          longestOnly: Boolean = false): Dataset[Match] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    extracted.select(org.apache.spark.sql.functions.col("url"),
-        org.apache.spark.sql.functions.col("text")).as[(String, String)]
-      .mapPartitions { it =>
-        val m = model.value
-        val automaton = m.automaton
-        val payload = m.payload
-        val buf = new graft.dict.HitBuffer()
-        it.filter(_._2 != null).flatMap { case (url, text) =>
-          val d = Lemma.lemmatizeDoc(text)
-          automaton.scanInto(d.lemmaText, buf, longestOnly)
-          val out = new scala.collection.mutable.ArrayBuffer[Match](buf.size)
-          var i = 0
-          while (i < buf.size) {
-            val (from, to) = Lemma.mapHit(d, buf.from(i), buf.to(i))
-            val matched = text.substring(from - 1, to)
-            payload(buf.termId(i)).foreach { p =>
-              out += Match(url, from, to, matched, p.classIri, p.ont,
-                if (p.pref) MatchType.Pref else MatchType.Syn)
-            }
-            i += 1
-          }
-          out
-        }
-      }
   }
 }

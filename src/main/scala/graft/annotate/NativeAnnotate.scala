@@ -30,10 +30,13 @@ import graft.dict.AnnotatorModel
   * pre-encoded concept IRIs — zero per-row string conversion.
   *
   * One generator per output shape:
-  *  - [[annotateMatches]] / [[annotateMatchesSharded]]: per-occurrence
+  *  - [[AnnotateMatchesGen]] behind [[annotateMatches]] (one dictionary;
+  *    Annotator+ `lemmatize` and clinical `context` are options of the same
+  *    scan) and [[annotateMatchesSharded]] (term-id shards): per-occurrence
   *    matches, checked against the naive scalar matcher
   *    ([[graft.oracle.ReferenceOracle.directMatches]]) and the DuckDB
-  *    oracles (`ann_direct`, `ann_longest`, `ann_sharded`);
+  *    oracles (`ann_direct`, `ann_longest`, `ann_sharded`, `ann_lemma`,
+  *    `ann_context`);
   *  - [[annotateTriples]]: the complete per-document triple set, checked
   *    against the join assembly `Pipeline.run` executes (`Filters` →
   *    `Scoring.directScores` → `Expand` → `Triples.assemble` → threshold)
@@ -100,49 +103,87 @@ object NativeAnnotate {
   }
 
   /** Per-occurrence matches with 1-based inclusive offsets — `(url, from,
-    * to, text, class_iri, ont, match_type)`. NULL text yields no rows. */
+    * to, text, class_iri, ont, match_type)`. NULL text yields no rows.
+    *
+    * Annotator+ options of the same scan:
+    *  - `lemmatize`: `model` is lemma-built
+    *    ([[graft.dict.DictBuild.buildLemmatized]]); the scan runs over
+    *    [[Lemma.lemmatizeDoc]]'s lemma-space text and reports ORIGINAL
+    *    offsets and text. Whole-word by construction — the offset
+    *    back-mapping needs token-aligned hits — so `wholeWord = false` is
+    *    rejected.
+    *  - `context`: appends `negated`, `experiencer` and `temporality` from
+    *    [[Context.classify]] over the original text. */
   def annotateMatches(extracted: DataFrame,
                       model: Broadcast[AnnotatorModel],
                       longestOnly: Boolean = false,
-                      wholeWord: Boolean = true): DataFrame = {
-    val gen = AnnotateMatchesGen(GraftShim.expression(col("text")), model,
-      longestOnly, wholeWord)
-    extracted.select(col("url"), GraftShim.column(gen))
+                      wholeWord: Boolean = true,
+                      lemmatize: Boolean = false,
+                      context: Boolean = false): DataFrame = {
+    require(wholeWord || !lemmatize,
+      "lemmatize=true is whole-word by construction (token-aligned offset mapping)")
+    matches(extracted, Seq(model), longestOnly, wholeWord, lemmatize, context)
   }
 
-  /** Sharded-dictionary match stream (S4 scale path — see
-    * [[AnnotateMatchesShardedGen]]); spec-pinned equal to the
+  /** The same match stream over a term-id-sharded dictionary (S4 scale
+    * path, [[Sharded.buildModels]]); spec-pinned equal to the
     * single-automaton [[annotateMatches]]. */
   def annotateMatchesSharded(extracted: DataFrame,
                              models: Seq[Broadcast[AnnotatorModel]],
                              longestOnly: Boolean = false,
                              wholeWord: Boolean = true): DataFrame = {
     require(models.nonEmpty, "at least one shard model required")
-    val gen = AnnotateMatchesShardedGen(GraftShim.expression(col("text")),
-      models, longestOnly, wholeWord)
+    matches(extracted, models, longestOnly, wholeWord, lemmatize = false, context = false)
+  }
+
+  private def matches(extracted: DataFrame, models: Seq[Broadcast[AnnotatorModel]],
+                      longestOnly: Boolean, wholeWord: Boolean,
+                      lemmatize: Boolean, context: Boolean): DataFrame = {
+    val gen = AnnotateMatchesGen(GraftShim.expression(col("text")), models,
+      longestOnly, wholeWord, lemmatize, context)
     extracted.select(col("url"), GraftShim.column(gen))
   }
 }
 
-/** Offset-bearing sibling of [[AnnotateTriplesGen]]: emits one row per
-  * dictionary OCCURRENCE — `(from, to, text, class_iri, ont, match_type)`,
-  * offsets 1-based inclusive (reference mgrep wire-tuple parity) — the scan
-  * behind the persisted-matches pipeline stage and the request-filter
-  * queries. */
+/** Offset-bearing sibling of [[AnnotateTriplesGen]] and the engine's one
+  * match emitter: one row per dictionary OCCURRENCE — `(from, to, text,
+  * class_iri, ont, match_type)`, offsets 1-based inclusive (reference mgrep
+  * wire-tuple parity), plus `(negated, experiencer, temporality)` in
+  * context mode — the scan behind the persisted-matches pipeline stage and
+  * the request-filter queries.
+  *
+  * Scan phase: one model scans straight into the hit buffer. k > 1 models
+  * are term-id shards ([[Sharded]]) that scan the SAME in-place bytes with
+  * `longestOnly = false`; their hits merge with shard-local ids mapped back
+  * to global (`local·k + shard`), and `longest_only` applies to the
+  * cross-shard union. In lemma mode the scanned text is the document's
+  * lemma-space text. Emit phase: each hit fans out to its payload rows
+  * through its owning shard (`termId % k`, local id `termId / k`); lemma
+  * hits map back to original offsets first, and matched text is sliced
+  * from the original text. */
 case class AnnotateMatchesGen(
     child: Expression,
-    model: Broadcast[AnnotatorModel],
+    models: Seq[Broadcast[AnnotatorModel]],
     longestOnly: Boolean,
-    wholeWord: Boolean = true)
+    wholeWord: Boolean,
+    lemmatize: Boolean,
+    context: Boolean)
   extends UnaryExpression with Generator with CodegenFallback {
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("from", IntegerType, nullable = false),
-    StructField("to", IntegerType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("class_iri", StringType, nullable = false),
-    StructField("ont", StringType, nullable = false),
-    StructField("match_type", StringType, nullable = false)))
+  override def elementSchema: StructType = {
+    val base = StructType(Seq(
+      StructField("from", IntegerType, nullable = false),
+      StructField("to", IntegerType, nullable = false),
+      StructField("text", StringType, nullable = false),
+      StructField("class_iri", StringType, nullable = false),
+      StructField("ont", StringType, nullable = false),
+      StructField("match_type", StringType, nullable = false)))
+    if (!context) base
+    else base
+      .add("negated", BooleanType, nullable = false)
+      .add("experiencer", StringType, nullable = false)
+      .add("temporality", StringType, nullable = false)
+  }
   override def prettyName: String = "annotate_matches"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -151,13 +192,63 @@ case class AnnotateMatchesGen(
       s"annotate_matches requires STRING input, got ${other.catalogString}")
   }
 
-  @transient private lazy val compiled = CompiledMatcher.cached(model)
+  @transient private lazy val compiled = CompiledMatcher.cached(models)
   @transient private lazy val buf = new graft.dict.HitBuffer()
+  @transient private lazy val shardBuf = new graft.dict.HitBuffer()
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = child.eval(input)
-    if (t == null) Iterator.empty
-    else compiled.matches(t.asInstanceOf[UTF8String], buf, longestOnly, wholeWord)
+    if (t == null) return Iterator.empty
+    val text = t.asInstanceOf[UTF8String]
+    // the original text decoded to UTF-16, for the modes that read it by char
+    val str = if (lemmatize || context) text.toString else null
+    val lemmaDoc = if (lemmatize) Lemma.lemmatizeDoc(str) else null
+    val ascii = scan(if (lemmatize) UTF8String.fromString(lemmaDoc.lemmaText) else text)
+    if (buf.size == 0) return Iterator.empty
+    // char offsets == byte offsets only when the scanned original was ASCII;
+    // otherwise matched text is sliced from the decoded String
+    val decoded = if (str != null) str else if (ascii) null else text.toString
+    val k = compiled.length
+    val out = new mutable.ArrayBuffer[InternalRow](buf.size)
+    var i = 0
+    while (i < buf.size) {
+      val tid = buf.termId(i)
+      val owner = compiled(tid % k)
+      val local = tid / k
+      if (owner.hasPayload(local)) {
+        var from = buf.from(i)
+        var to = buf.to(i)
+        if (lemmatize) {
+          val (f, e) = Lemma.mapHit(lemmaDoc, from, to)
+          from = f; to = e
+        }
+        val matched =
+          if (decoded == null) text.substring(from - 1, to)
+          else UTF8String.fromString(decoded.substring(from - 1, to))
+        val attrs = if (context) Context.classify(decoded, from, to) else null
+        owner.emit(out, from, to, matched, local, attrs)
+      }
+      i += 1
+    }
+    out.iterator
+  }
+
+  /** Scan phase into `buf`; `true` if the scanned text was pure ASCII. */
+  private def scan(text: UTF8String): Boolean = {
+    if (compiled.length == 1)
+      return compiled(0).scanRaw(text, buf, longestOnly, wholeWord)
+    val k = compiled.length
+    buf.clear()
+    var ascii = true
+    var s = 0
+    while (s < k) {
+      // longestOnly deliberately false per shard — the policy is cross-shard
+      ascii = compiled(s).scanRaw(text, shardBuf, longestOnly = false, wholeWord)
+      buf.appendFromMapped(shardBuf, k, s) // local ids → global
+      s += 1
+    }
+    if (longestOnly) buf.longestPerStartInPlace()
+    ascii
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -182,115 +273,31 @@ final class CompiledMatcher(m: AnnotatorModel) extends Serializable {
     if (entries == null) null else entries.map(p => if (p.pref) uPref else uSyn)
   }
 
-  def matches(text: UTF8String, buf: graft.dict.HitBuffer,
-              longestOnly: Boolean, wholeWord: Boolean = true): Iterator[InternalRow] = {
-    // total UTF-8 scan; the pure-ASCII flag decides how matched text is
-    // sliced (char offsets == byte offsets == code points only when ASCII)
-    val ascii = scanRaw(text, buf, longestOnly, wholeWord)
-    if (buf.size == 0) return Iterator.empty
-    val decoded: String = if (ascii) null else text.toString
-    val out = new mutable.ArrayBuffer[InternalRow](buf.size)
-    var i = 0
-    while (i < buf.size) {
-      emitHit(out, text, ascii, decoded, buf.from(i), buf.to(i), buf.termId(i))
-      i += 1
-    }
-    out.iterator
-  }
-
-  /** Raw automaton pass (no payload fan-out) — the sharded generator scans
-    * each shard with this, merges buffers, then emits via [[emitHit]]. */
+  /** Raw automaton pass (no payload fan-out); `true` = pure-ASCII text. */
   private[annotate] def scanRaw(text: UTF8String, buf: graft.dict.HitBuffer,
                                 longestOnly: Boolean, wholeWord: Boolean): Boolean =
     auto.scanUtf8Into(text.getBaseObject, text.getBaseOffset,
       text.numBytes, buf, longestOnly, wholeWord)
 
-  /** Fan one hit out to its payload rows. Offsets are 1-based inclusive CHAR
-    * positions; on the ASCII path chars == bytes so the UTF8String substring
-    * is exact either way. */
-  private[annotate] def emitHit(out: mutable.ArrayBuffer[InternalRow],
-                                text: UTF8String, ascii: Boolean, decoded: String,
-                                from: Int, to: Int, tid: Int): Unit = {
+  private[annotate] def hasPayload(tid: Int): Boolean = iriOf(tid) != null
+
+  /** Fan one hit out to its payload rows; `attrs` (context mode) appends
+    * the three context columns. */
+  private[annotate] def emit(out: mutable.ArrayBuffer[InternalRow],
+                             from: Int, to: Int, matched: UTF8String, tid: Int,
+                             attrs: Context.Attrs): Unit = {
     val iris = iriOf(tid)
-    if (iris == null) return
-    val matched =
-      if (ascii) text.substring(from - 1, to)
-      else UTF8String.fromString(decoded.substring(from - 1, to))
     val onts = ontOf(tid)
     val mts = mtOf(tid)
     var j = 0
     while (j < iris.length) {
       out += new GenericInternalRow(
-        Array[Any](from, to, matched, iris(j), onts(j), mts(j)))
+        if (attrs == null) Array[Any](from, to, matched, iris(j), onts(j), mts(j))
+        else Array[Any](from, to, matched, iris(j), onts(j), mts(j), attrs.negated,
+          UTF8String.fromString(attrs.experiencer), UTF8String.fromString(attrs.temporality)))
       j += 1
     }
   }
-}
-
-/** S4 on the native tier: the sharded-dictionary scan (>driver-memory
-  * regime, [[graft.annotate.Sharded]]) as a Catalyst Generator — k term-id
-  * shard automatons scan the SAME in-place `UTF8String` bytes in one pass,
-  * hits merge into a combined buffer, `longest_only` applies to the
-  * cross-shard union, and each hit's payload resolves through its owning
-  * shard (`termId % k` — the sharding key makes origin recoverable). Same
-  * zero-island `Generate` plan as the single-dictionary scan. */
-case class AnnotateMatchesShardedGen(
-    child: Expression,
-    models: Seq[Broadcast[AnnotatorModel]],
-    longestOnly: Boolean,
-    wholeWord: Boolean = true)
-  extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("from", IntegerType, nullable = false),
-    StructField("to", IntegerType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("class_iri", StringType, nullable = false),
-    StructField("ont", StringType, nullable = false),
-    StructField("match_type", StringType, nullable = false)))
-  override def prettyName: String = "annotate_matches_sharded"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"annotate_matches_sharded requires STRING input, got ${other.catalogString}")
-  }
-
-  @transient private lazy val compiled = CompiledMatcher.cachedAll(models)
-  @transient private lazy val shardBuf = new graft.dict.HitBuffer()
-  @transient private lazy val comb = new graft.dict.HitBuffer()
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = child.eval(input)
-    if (t == null) return Iterator.empty
-    val text = t.asInstanceOf[UTF8String]
-    val k = compiled.length
-    comb.clear()
-    var ascii = true
-    var s = 0
-    while (s < k) {
-      // longestOnly deliberately false per shard — the policy is cross-shard
-      ascii = compiled(s).scanRaw(text, shardBuf, longestOnly = false, wholeWord)
-      comb.appendFromMapped(shardBuf, k, s) // local ids → global
-      s += 1
-    }
-    if (longestOnly) comb.longestPerStartInPlace()
-    if (comb.size == 0) return Iterator.empty
-    val decoded: String = if (ascii) null else text.toString
-    val out = new mutable.ArrayBuffer[InternalRow](comb.size)
-    var i = 0
-    while (i < comb.size) {
-      val tid = comb.termId(i)
-      // owner shard = tid % k; its payload is indexed by LOCAL id = tid / k
-      compiled(tid % k).emitHit(out, text, ascii, decoded,
-        comb.from(i), comb.to(i), tid / k)
-      i += 1
-    }
-    out.iterator
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** JVM-wide identity registry for broadcast VALUES. Cache keys must not be
@@ -357,18 +364,16 @@ private[annotate] final class CompileCache[V](initialMax: Int) {
 object CompiledMatcher {
   private val cache = new CompileCache[CompiledMatcher](8)
 
-  def cached(model: Broadcast[AnnotatorModel]): CompiledMatcher = {
-    val value = model.value
-    cache.getOrCompute(ValueIdentity.of(value).toString)(new CompiledMatcher(value))
-  }
-
-  /** Sharded-scan entry point: k live matchers at once, so the cache must
-    * hold all of them plus headroom for a concurrent single-dictionary scan
-    * — otherwise k > capacity thrashes the LRU (every task recompiles every
-    * shard, serialized under the lock). */
-  def cachedAll(models: Seq[Broadcast[AnnotatorModel]]): Array[CompiledMatcher] = {
+  /** One matcher per model. A sharded scan holds k live matchers at once,
+    * so the cache must hold all of them plus headroom for a concurrent
+    * single-dictionary scan — otherwise k > capacity thrashes the LRU
+    * (every task recompiles every shard, serialized under the lock). */
+  def cached(models: Seq[Broadcast[AnnotatorModel]]): Array[CompiledMatcher] = {
     cache.ensureCapacity(math.max(8, 2 * models.length))
-    models.map(cached).toArray
+    models.map { model =>
+      val value = model.value
+      cache.getOrCompute(ValueIdentity.of(value).toString)(new CompiledMatcher(value))
+    }.toArray
   }
 }
 

@@ -75,81 +75,19 @@ final class Automaton private[dict] (
 
   private[dict] def childViaCsr(s: Int, c: Char): Int = child(s, c)
 
-  /** All dictionary hits in `text` into a REUSABLE primitive-array buffer —
-    * the allocation-free hot path, called once per document from
-    * `mapPartitions` with a per-partition buffer (SURVEY.md §5 —
-    * deliberately NOT a Catalyst Expression, so per-partition setup
-    * amortizes). ~10× the throughput of the boxed variant (per-hit case
-    * class allocation dominated the scan at realistic hit densities).
-    */
-  def scanInto(text: String, buf: HitBuffer, longestOnly: Boolean = false,
-               wholeWord: Boolean = true): HitBuffer = {
-    buf.clear()
-    val len = text.length
-    var state = 0
-    var pos = 0
-    while (pos < len) {
-      val c0 = text.charAt(pos)
-      val c = Automaton.normChar(c0)
-      // fail-resolved step: dense DFA row when hot, CSR + fail chain when not
-      val nxt =
-        if (state < denseStates && c < 128) denseNext((state << 7) + c)
-        else {
-          var s = state
-          var t = child(s, c)
-          while (t < 0 && s != 0) { s = fail(s); t = child(s, c) }
-          if (t >= 0) t else 0
-        }
-      pos += 1
-      if (nxt == 0) {
-        state = 0
-        // WORD-RUN SKIP: landing at root after consuming a word char means
-        // no dictionary prefix is live, and every match starting in the
-        // rest of this word run fails the boundary-before check — skip the
-        // run in a tight classify-advance loop.
-        if (wholeWord && Automaton.isWordChar(c0)) {
-          while (pos < len && Automaton.isWordChar(text.charAt(pos))) pos += 1
-        }
-      } else {
-        state = nxt
-        emitChars(nxt, text, len, pos - 1, buf, wholeWord)
-      }
-    }
-    if (longestOnly) buf.longestPerStartInPlace()
-    buf
-  }
-
-  /** Emit all terms ending at `pos` via the output chain (char coords).
-    * `wholeWord=false` (reference `whole_word_only` option off) emits every
-    * occurrence, boundaries ignored. */
-  @inline private def emitChars(st: Int, text: String, len: Int, pos: Int,
-                                buf: HitBuffer, wholeWord: Boolean): Unit = {
-    var n = emitNode(st)
-    if (n >= 0) {
-      val boundAfter = !wholeWord || pos == len - 1 ||
-        !Automaton.isWordChar(text.charAt(pos + 1))
-      if (boundAfter) {
-        while (n >= 0) {
-          val start = pos - depth(n) + 1
-          if (!wholeWord || start == 0 || !Automaton.isWordChar(text.charAt(start - 1)))
-            buf.add(start + 1, pos + 1, termIdAt(n)) // 1-based inclusive
-          n = out(n)
-        }
-      }
-    }
-  }
-
-  /** TOTAL byte-level scan over UTF-8 text read in place (no copy, no
-    * String materialization, for ANY input) — the parquet hot path: a
-    * `UTF8String` from the vectorized reader is scanned directly via its
-    * base object + offset ([[org.apache.spark.unsafe.Platform]] reads).
+  /** The automaton's one scan loop: all dictionary hits in UTF-8 text read
+    * in place (no copy, no String materialization, for ANY input) into a
+    * REUSABLE primitive-array buffer — no per-hit allocation. A
+    * `UTF8String` from the vectorized parquet reader is scanned directly via
+    * its base object + offset ([[org.apache.spark.unsafe.Platform]] reads).
     * Real web text is heavily non-ASCII, so this scan decodes multi-byte
     * codepoints INLINE (feeding the automaton the same UTF-16 units
     * `String.charAt` would — supplementary codepoints become two surrogate
     * steps) while offsets stay exact UTF-16 char positions:
     *
-    *   - `buf` receives 1-based inclusive CHAR offsets, identical to
-    *     [[scanInto]] (property-tested on random mixed-script text);
+    *   - `buf` receives 1-based inclusive CHAR offsets of the decoded
+    *     String, the [[NaiveMatcher]]'s coordinates (property-tested on
+    *     random mixed-script text);
     *   - boundary checks read raw bytes (any UTF-8 lead/continuation byte
     *     is negative → non-word, exactly matching the char class);
     *   - a small ring buffer maps the last `maxDepth+2` char positions to
@@ -186,9 +124,11 @@ final class Automaton private[dict] (
         pos += 1
         if (nxt == 0) {
           state = 0
-          // word-run skip (see scanInto): mid-run starts are boundary-dead
-          // and no prefix is live; negative (multi-byte) bytes are non-word
-          // so the skip stops at them
+          // WORD-RUN SKIP: landing at root after consuming a word byte
+          // means no dictionary prefix is live, and every match starting in
+          // the rest of this word run fails the boundary-before check — skip
+          // the run. Negative (multi-byte) bytes are non-word, so the skip
+          // stops at them
           if (wholeWord && Automaton.isWordByte(b)) {
             while (pos < numBytes &&
               Automaton.isWordByte(Platform.getByte(base, offset + pos))) pos += 1
@@ -306,12 +246,6 @@ final class Automaton private[dict] (
     if (longestOnly) buf.longestPerStartInPlace()
   }
 
-  /** Backward-compatible name: scans any UTF-8 (now total); `true` = pure
-    * ASCII input (byte offsets == char offsets). */
-  def scanAsciiBytesInto(base: AnyRef, offset: Long, numBytes: Int,
-                         buf: HitBuffer, longestOnly: Boolean = false): Boolean =
-    scanUtf8Into(base, offset, numBytes, buf, longestOnly)
-
   @inline private def generalStep(state: Int, c: Char): Int = {
     var s = state
     var t = child(s, c)
@@ -358,9 +292,12 @@ final class Automaton private[dict] (
     }
   }
 
-  /** Boxed convenience wrapper (tests / oracle comparisons). */
+  /** Boxed convenience wrapper over [[scanUtf8Into]] (term lookups, tests,
+    * oracle comparisons). */
   def scan(text: String, longestOnly: Boolean = false): mutable.ArrayBuffer[graft.RawHit] = {
-    val buf = scanInto(text, new HitBuffer(), longestOnly)
+    val u8 = org.apache.spark.unsafe.types.UTF8String.fromString(text)
+    val buf = new HitBuffer()
+    scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf, longestOnly)
     val out = new mutable.ArrayBuffer[graft.RawHit](buf.size)
     var i = 0
     while (i < buf.size) { out += graft.RawHit(buf.from(i), buf.to(i), buf.termId(i)); i += 1 }
@@ -407,13 +344,6 @@ final class HitBuffer(initialCapacity: Int = 256) {
     }
     froms(size) = f; tos(size) = t; ids(size) = id
     size += 1
-  }
-
-  /** Append another buffer's hits (sharded-dictionary scans merge per-shard
-    * buffers before applying the cross-shard longest_only policy). */
-  def appendFrom(o: HitBuffer): Unit = {
-    var i = 0
-    while (i < o.size) { add(o.froms(i), o.tos(i), o.ids(i)); i += 1 }
   }
 
   /** Append with an affine id remap (`id·mul + off`) — shard-LOCAL term ids

@@ -214,17 +214,11 @@ case class AnnotatorModel(automaton: Automaton,
     * automaton and keep full-span hits (from=1, to=length) — exact term
     * equality by construction. Strings that aren't dictionary terms resolve
     * to nothing (stopping a non-term is a no-op, reference behavior). */
-  def termIdsOf(terms: Seq[String]): Set[Int] = {
-    val buf = new HitBuffer()
+  def termIdsOf(terms: Seq[String]): Set[Int] =
     terms.flatMap { t =>
       val norm = t.trim.replaceAll("\\s+", " ").toUpperCase(java.util.Locale.ROOT)
-      automaton.scanInto(norm, buf)
-      (0 until buf.size)
-        .filter(i => buf.from(i) == 1 && buf.to(i) == norm.length)
-        .map(buf.termId)
-        .toList // materialize before the shared buffer is cleared by the next scan
+      automaton.scan(norm).filter(h => h.from == 1 && h.to == norm.length).map(_.termId)
     }.toSet
-  }
 }
 
 object AutomatonBuild {

@@ -63,10 +63,8 @@ private[graft] object AnnTier {
     // DuckDB-checked end-to-end (SQL lemmatizer + lemma-space offset
     // back-mapping); plus offset/identity-parity specs (LemmaAndContextSpec)
     "ann_lemma" -> ((s, dir) =>
-      graft.annotate.LemmaScan.annotateDirectLemma(corpus(s, dir), lemmaModel(s)).toDF()
-        .select(col("url"), col("from"), col("to"), col("text"),
-          col("classIri").as("class_iri"), col("ont"),
-          col("matchType").as("match_type"))),
+      graft.annotate.NativeAnnotate
+        .annotateMatches(corpus(s, dir), lemmaModel(s), lemmatize = true)),
 
     // inter-annotator agreement: Cohen's kappa between the strict and
     // lemmatized annotators over the doc × concept presence universe — the
@@ -79,9 +77,9 @@ private[graft] object AnnTier {
     "ann_agreement" -> ((s, dir) => {
       val strict = matches(s, dir).select("url", "class_iri").distinct()
         .withColumn("in_s", lit(1))
-      val lem = graft.annotate.LemmaScan
-        .annotateDirectLemma(corpus(s, dir), lemmaModel(s)).toDF()
-        .select(col("url"), col("classIri").as("class_iri")).distinct()
+      val lem = graft.annotate.NativeAnnotate
+        .annotateMatches(corpus(s, dir), lemmaModel(s), lemmatize = true)
+        .select("url", "class_iri").distinct()
         .withColumn("in_l", lit(1))
       val cells = strict.join(lem, Seq("url", "class_iri"), "full_outer")
         .agg(
@@ -117,10 +115,10 @@ private[graft] object AnnTier {
     // — DuckDB-checked (trigger-window algorithm recomputed in SQL); the
     // scalar is also golden-tested in specs
     "ann_context" -> ((s, dir) =>
-      graft.annotate.ContextScan.annotateWithContext(corpus(s, dir), model(s)).toDF()
-        .select(col("url"), col("from"), col("to"),
-          col("classIri").as("class_iri"), col("negated"),
-          col("experiencer"), col("temporality"))),
+      graft.annotate.NativeAnnotate
+        .annotateMatches(corpus(s, dir), model(s), context = true)
+        .select("url", "from", "to", "class_iri", "negated", "experiencer",
+          "temporality")),
 
     // Annotator+ mallet-slot analogue: the rule-tagger recognizer dispatched
     // THROUGH the Recognizer seam (Annotator.matches) — a non-dictionary

@@ -105,7 +105,6 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("lemma mode: affected set + kept/rescanned matches == full lemma rescan") {
     import spark.implicits._
-    import graft.annotate.LemmaScan
     val v1c = Seq(("http://l#A", "L", "run", Seq.empty[String]),
       ("http://l#B", "L", "jump", Seq.empty[String]))
       .toDF("class_iri", "ont", "pref_label", "synonyms")
@@ -121,7 +120,7 @@ class IncrementalSpec extends AnyFunSuite {
       ("doc://b", "she runs fast"),    // RUN unchanged → unaffected
       ("doc://c", "they leaped over")) // added LEAP matches here → affected
       .toDF("url", "text")
-    val v1M = LemmaScan.annotateDirectLemma(docs, m1).toDF()
+    val v1M = NativeAnnotate.annotateMatches(docs, m1, lemmatize = true)
     val affected = Incremental.affectedUrls(spark, docs, v1M,
       Incremental.diff(DictBuild.flatDict(d1), DictBuild.flatDict(d2)),
       lemma = true)
@@ -129,10 +128,10 @@ class IncrementalSpec extends AnyFunSuite {
     // incremental match stream (kept unaffected v1 + rescanned affected)
     // equals a full v2 lemma rescan
     val kept = v1M.join(affected, Seq("url"), "left_anti")
-    val re = LemmaScan.annotateDirectLemma(
-      docs.join(affected, Seq("url"), "left_semi"), m2).toDF()
+    val re = NativeAnnotate.annotateMatches(
+      docs.join(affected, Seq("url"), "left_semi"), m2, lemmatize = true)
     val inc = kept.unionByName(re).collect().map(_.toSeq).toSet
-    val full = LemmaScan.annotateDirectLemma(docs, m2).toDF()
+    val full = NativeAnnotate.annotateMatches(docs, m2, lemmatize = true)
       .collect().map(_.toSeq).toSet
     assert(inc === full)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.annotate.{Context, ContextScan, Lemma, LemmaScan}
+import graft.annotate.{Context, Lemma, NativeAnnotate}
 import graft.dict.{AutomatonBuild, DictBuild}
 import graft.fixture.OntologyFixture
 
@@ -73,13 +73,13 @@ class LemmaAndContextSpec extends AnyFunSuite {
     val term = termOpt.get
     val inflected = term.split(' ').map(_ + "s").mkString(" ") // pluralize every token
     val text = s"prefix words then $inflected and a tail"
-    val hits = LemmaScan.annotateDirectLemma(docsDf(Seq(text)), lemmaModel)
+    val hits = NativeAnnotate.annotateMatches(docsDf(Seq(text)), lemmaModel, lemmatize = true)
       .collect()
     assert(hits.nonEmpty, s"no lemma hits for '$inflected' (term '$term')")
-    val h = hits.minBy(_.from)
-    val matched = text.substring(h.from - 1, h.to)
+    val h = hits.minBy(_.getAs[Int]("from"))
+    val matched = text.substring(h.getAs[Int]("from") - 1, h.getAs[Int]("to"))
     assert(matched === inflected, "matched text must be the ORIGINAL inflected span")
-    assert(h.text === inflected)
+    assert(h.getAs[String]("text") === inflected)
   }
 
   test("lemma scan == plain scan on uninflected text (lemma is identity there)") {
@@ -97,10 +97,11 @@ class LemmaAndContextSpec extends AnyFunSuite {
     }
     assert(idDocs.nonEmpty, "need at least one lemma-identity doc in the slice")
     val df = spark.createDataFrame(spark.sparkContext.parallelize(idDocs.toSeq), corpus.schema)
-    val plain = graft.annotate.NativeAnnotate.annotateMatches(df, plainModel).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(4))).toSet
-    val lemma = LemmaScan.annotateDirectLemma(df, lemmaModel).collect()
-      .map(m => (m.url, m.from, m.to, m.classIri)).toSet
+    def rows(lemmatize: Boolean) = NativeAnnotate
+      .annotateMatches(df, if (lemmatize) lemmaModel else plainModel, lemmatize = lemmatize)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(4))).toSet
+    val plain = rows(lemmatize = false)
+    val lemma = rows(lemmatize = true)
     assert(lemma === plain)
     assert(lemma.nonEmpty)
   }
@@ -229,25 +230,85 @@ class LemmaAndContextSpec extends AnyFunSuite {
     assert(attrs("patient has tumor", "tumor").temporality === "RECENT")
   }
 
-  test("ContextScan emits match + attributes over Spark, zero extra shuffles") {
+  test("context mode emits match + attributes over Spark, zero extra shuffles") {
     val terms = OntologyFixture.conceptsDf(spark)
       .select("pref_label").collect().map(_.getString(0))
       .filter(_.length >= 4).sorted.take(2) // deterministic, survives min_term_size
     val df = docsDf(Seq(
       s"patient shows ${terms(0)} clearly",
       s"no ${terms(0)} but family history of ${terms(1)}"))
-    val rows = ContextScan.annotateWithContext(df, plainModel).collect()
+    val withContext = Annotator.annotateWithContext(df, plainModel)
+    val rows = withContext.collect()
     assert(rows.nonEmpty)
-    val byDoc = rows.groupBy(_.url)
-    val affirmed = byDoc("doc://lem/0").filter(_.text.equalsIgnoreCase(terms(0)))
-    assert(affirmed.nonEmpty && affirmed.forall(!_.negated))
-    val negated = byDoc("doc://lem/1").filter(_.text.equalsIgnoreCase(terms(0)))
-    assert(negated.nonEmpty && negated.forall(_.negated))
-    val other = byDoc("doc://lem/1").filter(_.text.equalsIgnoreCase(terms(1)))
-    assert(other.nonEmpty && other.forall(r => r.experiencer == "OTHER" && !r.negated))
-    // plan shape: one typed scan, no exchange
-    val plan = ContextScan.annotateWithContext(df, plainModel)
-      .queryExecution.executedPlan.toString
+    def text(r: org.apache.spark.sql.Row) = r.getAs[String]("text")
+    def negated(r: org.apache.spark.sql.Row) = r.getAs[Boolean]("negated")
+    val byDoc = rows.groupBy(_.getAs[String]("url"))
+    val affirmed = byDoc("doc://lem/0").filter(text(_).equalsIgnoreCase(terms(0)))
+    assert(affirmed.nonEmpty && affirmed.forall(!negated(_)))
+    val neg = byDoc("doc://lem/1").filter(text(_).equalsIgnoreCase(terms(0)))
+    assert(neg.nonEmpty && neg.forall(negated))
+    val other = byDoc("doc://lem/1").filter(text(_).equalsIgnoreCase(terms(1)))
+    assert(other.nonEmpty &&
+      other.forall(r => r.getAs[String]("experiencer") == "OTHER" && !negated(r)))
+    // plan shape: the native match Generator, no exchange
+    val plan = withContext.queryExecution.executedPlan.toString
+    assert(plan.contains("Generate") && !plan.contains("MapPartitions"), plan)
     assert(!plan.contains("Exchange"), plan)
+  }
+
+  // ---- lemma + context options of the one match Generator ---------------
+
+  /** A one-concept dictionary: class T#TUMOR labelled "tumor". */
+  private def tumorModel(lemma: Boolean) = {
+    import spark.implicits._
+    val concepts = Seq(("http://t#TUMOR", "T", "tumor", Seq.empty[String]))
+      .toDF("class_iri", "ont", "pref_label", "synonyms")
+    val labels = DictBuild.labelRows(concepts)
+    val dict = if (lemma) DictBuild.buildLemmatized(labels) else DictBuild.build(labels)
+    AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, s"t-$lemma"))
+  }
+
+  test("Annotator facade: matches(lemmatize=true) reports the original inflected span") {
+    val text = "biopsy showed two tumors, both small"
+    val rows = Annotator.matches(docsDf(Seq(text)), tumorModel(lemma = true),
+        Annotator.Request(lemmatize = true))
+      .select("from", "to", "text", "class_iri").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3))).toSeq
+    val from = text.indexOf("tumors") + 1
+    assert(rows === Seq((from, from + 5, "tumors", "http://t#TUMOR")))
+    // lemma space is an option of the dictionary scan only
+    val tagger = new Annotator.RuleTaggerRecognizer
+    intercept[IllegalArgumentException] {
+      Annotator.matches(docsDf(Seq(text)), tumorModel(lemma = true),
+        Annotator.Request(lemmatize = true), recognizer = Some(tagger))
+    }
+  }
+
+  test("lemma + context modes over a surrogate pair: original offsets and text; NULL text yields no rows") {
+    // 😀 is two UTF-16 chars and four UTF-8 bytes before each term
+    val texts = Seq("😀 no tumors here", null, "😀😀 history of tumor")
+    val df = docsDf(texts)
+    def rows(lemma: Boolean, context: Boolean) = NativeAnnotate
+      .annotateMatches(df, tumorModel(lemma), lemmatize = lemma, context = context)
+      .collect().map(_.toSeq).toSet
+    val d0 = ("doc://lem/0", 7, 12, "tumors")
+    val d2 = ("doc://lem/2", 17, 21, "tumor")
+    assert(texts(0).substring(6, 12) === "tumors" && texts(2).substring(16, 21) === "tumor")
+    def row(d: (String, Int, Int, String), attrs: Any*) =
+      Seq(d._1, d._2, d._3, d._4, "http://t#TUMOR", "T", MatchType.Pref) ++ attrs
+    assert(rows(lemma = true, context = false) === Set(row(d0), row(d2)))
+    assert(rows(lemma = true, context = true) === Set(
+      row(d0, true, "PATIENT", "RECENT"), row(d2, false, "PATIENT", "HISTORICAL")))
+    // without lemmatization only the uninflected occurrence matches
+    assert(rows(lemma = false, context = true) ===
+      Set(row(d2, false, "PATIENT", "HISTORICAL")))
+    assert(NativeAnnotate.annotateMatches(df, tumorModel(lemma = true), lemmatize = true,
+      context = true).columns.toSeq === Seq("url", "from", "to", "text", "class_iri",
+      "ont", "match_type", "negated", "experiencer", "temporality"))
+    // lemma mode is whole-word by construction
+    intercept[IllegalArgumentException] {
+      NativeAnnotate.annotateMatches(df, tumorModel(lemma = true), wholeWord = false,
+        lemmatize = true)
+    }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.annotate.{Corpus, NativeAnnotate}
-import graft.dict.{AutomatonBuild, DictBuild, TrieBuilder, Automaton}
+import graft.dict.{AutomatonBuild, DictBuild, HitBuffer, NaiveMatcher, TrieBuilder, Automaton}
 import graft.fixture.OntologyFixture
 import graft.graph.Closure
 
@@ -16,8 +16,9 @@ import graft.graph.Closure
   * row; a row's name is the option under test), and the sparse-accumulator
   * branch; on non-ASCII fallback docs it must also equal the scalar oracle.
   * Plus: the plan it produces must actually BE native (no object-mode
-  * island), and the byte-level scan must equal the char-level scan on
-  * arbitrary ASCII input.
+  * island), and the automaton's byte-level scan must equal the naive
+  * scalar matcher ([[NaiveMatcher]]) over wholeWord × longestOnly, on
+  * ASCII and mixed-script input.
   */
 class NativeAnnotateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,6 +35,28 @@ class NativeAnnotateSpec extends AnyFunSuite {
   private lazy val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
   private lazy val semTable = OntologyFixture.conceptsDf(spark)
     .select(col("class_iri"), explode(col("tuis")).as("tui"))
+
+  /** Byte-scan hits of `text`: `(from, to, termId)`. */
+  private def byteHits(auto: Automaton, text: String, longest: Boolean = false,
+                       whole: Boolean = true): Set[(Int, Int, Int)] = {
+    val u8 = UTF8String.fromString(text)
+    val buf = new HitBuffer()
+    auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf, longest, whole)
+    (0 until buf.size).map(i => (buf.from(i), buf.to(i), buf.termId(i))).toSet
+  }
+
+  /** The byte scan equals the naive matcher for all four wholeWord ×
+    * longestOnly combinations; returns the default-option hits. */
+  private def assertNaiveParity(terms: Seq[(String, Int)], auto: Automaton,
+                                text: String): Set[(Int, Int, Int)] = {
+    val naive = new NaiveMatcher(terms.toArray)
+    for (whole <- Seq(true, false); longest <- Seq(false, true)) {
+      val want = naive.scan(text, longest, whole).map(h => (h.from, h.to, h.termId)).toSet
+      assert(byteHits(auto, text, longest, whole) === want,
+        s"wholeWord=$whole longestOnly=$longest mismatch on: $text")
+    }
+    byteHits(auto, text)
+  }
 
   private def tripleSet(df: DataFrame): Set[(String, String, String, String, Int, Double, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
@@ -149,23 +172,12 @@ class NativeAnnotateSpec extends AnyFunSuite {
   }
 
   test("whole_word_only=false finds mid-word occurrences; true suppresses them") {
-    val trie = new TrieBuilder
-    trie.insert("ASH", 0)
-    val auto = Automaton.fromTrie(trie)
+    val terms = Seq("ASH" -> 0)
+    val auto = Automaton.fromTrie(TrieBuilder.of(terms.iterator))
     val text = "XASHY ash"
-    val strict = auto.scanInto(text, new graft.dict.HitBuffer())
-    assert((0 until strict.size).map(i => (strict.from(i), strict.to(i))).toSet ===
-      Set((7, 9))) // only the standalone word
-    val loose = auto.scanInto(text, new graft.dict.HitBuffer(), wholeWord = false)
-    assert((0 until loose.size).map(i => (loose.from(i), loose.to(i))).toSet ===
-      Set((2, 4), (7, 9))) // mid-word occurrence too
-    // byte scan parity for the substring mode
-    val u8 = UTF8String.fromString(text)
-    val buf = new graft.dict.HitBuffer()
-    auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf,
-      longestOnly = false, wholeWord = false)
-    assert((0 until buf.size).map(i => (buf.from(i), buf.to(i))).toSet ===
-      Set((2, 4), (7, 9)))
+    assert(assertNaiveParity(terms, auto, text) === Set((7, 9, 0))) // only the standalone word
+    assert(byteHits(auto, text, whole = false) ===
+      Set((2, 4, 0), (7, 9, 0))) // mid-word occurrence too
   }
 
   test("sparse accumulator branch (denseLimit=0) == dense") {
@@ -220,13 +232,11 @@ class NativeAnnotateSpec extends AnyFunSuite {
   test("byte scan == char scan on arbitrary ASCII inputs (property)") {
     val rnd = new scala.util.Random(42)
     val vocab = Array("spark", "hash join", "window", "agg", "x1", "catalyst rule", "a_b")
-    val trie = new TrieBuilder
-    vocab.zipWithIndex.foreach { case (t, i) =>
-      trie.insert(t.toUpperCase.trim.replaceAll("\\s+", " "), i)
+    val terms = vocab.toSeq.zipWithIndex.map { case (t, i) =>
+      (t.toUpperCase.trim.replaceAll("\\s+", " "), i)
     }
-    val auto = Automaton.fromTrie(trie)
-    val charBuf = new graft.dict.HitBuffer()
-    val byteBuf = new graft.dict.HitBuffer()
+    val auto = Automaton.fromTrie(TrieBuilder.of(terms.iterator))
+    val buf = new HitBuffer()
     (1 to 300).foreach { _ =>
       val n = rnd.nextInt(60)
       val text = (1 to n).map { _ =>
@@ -234,14 +244,9 @@ class NativeAnnotateSpec extends AnyFunSuite {
         else rnd.alphanumeric.take(rnd.nextInt(6) + 1).mkString
       }.mkString(Seq(" ", ", ", "-", ".").apply(rnd.nextInt(4)))
       val u8 = UTF8String.fromString(text)
-      auto.scanInto(text, charBuf)
-      val ok = auto.scanAsciiBytesInto(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, byteBuf)
+      val ok = auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf)
       assert(ok, s"ASCII text must take the byte path: $text")
-      val charHits = (0 until charBuf.size)
-        .map(i => (charBuf.from(i), charBuf.to(i), charBuf.termId(i))).toSet
-      val byteHits = (0 until byteBuf.size)
-        .map(i => (byteBuf.from(i), byteBuf.to(i), byteBuf.termId(i))).toSet
-      assert(byteHits === charHits, s"mismatch on: $text")
+      assertNaiveParity(terms, auto, text)
     }
   }
 
@@ -292,21 +297,16 @@ class NativeAnnotateSpec extends AnyFunSuite {
   }
 
   test("UTF-8 byte scan is TOTAL: non-ASCII text scans in place, char offsets exact") {
-    val trie = new TrieBuilder
-    trie.insert("SPARK", 0)
-    val auto = Automaton.fromTrie(trie)
-    val buf = new graft.dict.HitBuffer()
+    val terms = Seq("SPARK" -> 0)
+    val auto = Automaton.fromTrie(TrieBuilder.of(terms.iterator))
     val text = "spark é spark 😀 spark"
     val u8 = UTF8String.fromString(text)
-    val pure = auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf)
+    val pure = auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, new HitBuffer())
     assert(!pure) // flag reports non-ASCII, but the scan is complete
-    val byteHits = (0 until buf.size).map(i => (buf.from(i), buf.to(i))).toSet
-    val charBuf = auto.scanInto(text, new graft.dict.HitBuffer())
-    val charHits = (0 until charBuf.size).map(i => (charBuf.from(i), charBuf.to(i))).toSet
-    assert(byteHits === charHits)
-    assert(byteHits.size === 3)
+    val hits = assertNaiveParity(terms, auto, text)
+    assert(hits.size === 3)
     // offsets are UTF-16 char coordinates (😀 counts as 2)
-    byteHits.foreach { case (f, t) => assert(text.substring(f - 1, t) == "spark") }
+    hits.foreach { case (f, t, _) => assert(text.substring(f - 1, t) == "spark") }
   }
 
   test("giant document (50 MB): linear scan, buffers grow, offsets stay exact") {
@@ -318,21 +318,20 @@ class NativeAnnotateSpec extends AnyFunSuite {
     while (sb.length < 50 * 1024 * 1024) sb.append(block)
     val giant = sb.toString
     val u8 = UTF8String.fromString(giant)
-    val auto = {
-      val dict = graft.dict.DictBuild.build(
-        DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
-      graft.dict.AutomatonBuild.build(spark, dict, "vG").automaton
-    }
-    val buf = new graft.dict.HitBuffer()
+    val dict = DictBuild.build(DictBuild.labelRows(OntologyFixture.conceptsDf(spark)))
+    val dictTerms = dict.select("term", "term_id").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    val auto = AutomatonBuild.build(spark, dict, "vG").automaton
+    val buf = new HitBuffer()
     val t0 = System.nanoTime()
     auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf)
     val sec = (System.nanoTime() - t0) / 1e9
     info(f"50 MB scan: $sec%.2f s (${50 / sec}%.0f MB/s), ${buf.size} hits")
-    val perBlock = auto.scanInto(block, new graft.dict.HitBuffer()).size
+    val perBlock = assertNaiveParity(dictTerms, auto, block).size
+    val tail = giant.substring(giant.length / block.length * block.length)
     // the trailing space makes every block repetition boundary-identical
     assert(buf.size === perBlock.toLong * (giant.length / block.length) +
-      auto.scanInto(giant.substring(giant.length / block.length * block.length),
-        new graft.dict.HitBuffer()).size)
+      assertNaiveParity(dictTerms, auto, tail).size)
     assert(sec < 10.0, "50 MB must scan in seconds, not minutes")
     // spot-check a late hit's offsets against the text
     val i = buf.size - 1
@@ -342,40 +341,26 @@ class NativeAnnotateSpec extends AnyFunSuite {
 
   test("empty dictionary: scans emit nothing, nothing crashes") {
     val auto = Automaton.fromTrie(new TrieBuilder)
-    val buf = new graft.dict.HitBuffer()
-    val u8 = UTF8String.fromString("any text at all é 😀")
-    auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes, buf)
-    assert(buf.size === 0)
-    assert(auto.scanInto("any text", new graft.dict.HitBuffer()).size === 0)
+    assert(assertNaiveParity(Nil, auto, "any text at all é 😀").isEmpty)
+    assert(assertNaiveParity(Nil, auto, "").isEmpty)
   }
 
   test("UTF-8 byte scan == char scan on random mixed-script text (property)") {
     val rnd = new scala.util.Random(7)
     val vocab = Array("spark", "hash join", "café", "naïve", "日本", "a_b", "x1")
-    val trie = new TrieBuilder
-    vocab.zipWithIndex.foreach { case (t, i) =>
-      trie.insert(t.toUpperCase.trim.replaceAll("\\s+", " "), i)
+    val terms = vocab.toSeq.zipWithIndex.map { case (t, i) =>
+      (t.toUpperCase.trim.replaceAll("\\s+", " "), i)
     }
-    val auto = Automaton.fromTrie(trie)
+    val auto = Automaton.fromTrie(TrieBuilder.of(terms.iterator))
     val fillers = Array("zzz", "é", "ß", "漢字", "😀", "qq", "-", "«»", "_x")
-    val byteBuf = new graft.dict.HitBuffer()
-    val charBuf = new graft.dict.HitBuffer()
     (1 to 300).foreach { _ =>
       val n = rnd.nextInt(40)
       val text = (1 to n).map { _ =>
         if (rnd.nextBoolean()) vocab(rnd.nextInt(vocab.length))
         else fillers(rnd.nextInt(fillers.length))
       }.mkString(Seq(" ", ", ", "·", ".").apply(rnd.nextInt(4)))
-      val u8 = UTF8String.fromString(text)
-      // both boundary modes: byte scan == char scan, offset-exact
-      Seq(true, false).foreach { ww =>
-        auto.scanUtf8Into(u8.getBaseObject, u8.getBaseOffset, u8.numBytes,
-          byteBuf, longestOnly = false, wholeWord = ww)
-        auto.scanInto(text, charBuf, longestOnly = false, wholeWord = ww)
-        val b = (0 until byteBuf.size).map(i => (byteBuf.from(i), byteBuf.to(i), byteBuf.termId(i))).toSet
-        val c = (0 until charBuf.size).map(i => (charBuf.from(i), charBuf.to(i), charBuf.termId(i))).toSet
-        assert(b === c, s"wholeWord=$ww mismatch on: $text")
-      }
+      // all four option combinations, offset-exact
+      assertNaiveParity(terms, auto, text)
     }
   }
 

@@ -15,7 +15,8 @@ class PlanContractSpec extends AnyFunSuite {
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
   test("annotate scans plan as a native Generate — no object-mode island") {
-    val plans = Seq("ann_longest", "ann_triples", "ann_sharded", "kg_pred_stats",
+    val plans = Seq("ann_longest", "ann_triples", "ann_sharded", "ann_lemma",
+      "ann_agreement", "ann_context", "kg_pred_stats",
       "kg_obj_degree_dist").map(q => q -> plan(q)) :+
       ("SparkEntry.entry" -> SparkEntry.entry(spark).queryExecution.executedPlan.toString)
     for ((q, p) <- plans) {
